@@ -71,11 +71,12 @@ def hash_bucket(col: Column, n: int, salt: int = 0) -> Column:
 def minhash_expr(shingle_hashes: Column, a: int, b: int, p: int = (1 << 31) - 1) -> Column:
     """One MinHash signature component: ``min((a*h + b) mod p)`` over a doc's
     shingle-hash array. a,b are per-component constants; p is a Mersenne
-    prime (2^31-1 keeps a*h < 2^63 under ANSI arithmetic). Stays JVM-side
-    via ``array_min(transform(...))`` — no UDF.
+    prime (2^31-1 keeps a*h < 2^63 under ANSI arithmetic).
 
-    Scale note: signatures are computed in one narrow projection per doc;
-    the only shuffle in MinHash-LSH dedup is the band→bucket groupBy.
+    The reference form of the arithmetic: ``dedup.minhash_signatures``
+    computes the same components in a numpy fold (tests hold the two
+    equal element for element), and the DuckDB oracle twin
+    (``queries._minhash_bands_sql``) mirrors this expression.
     """
     return F.array_min(
         F.transform(shingle_hashes, lambda h: (h % F.lit(p) * F.lit(a) + F.lit(b)) % F.lit(p))

@@ -9,18 +9,26 @@ embedding-cosine near-dup.
 Scale design:
 - exact dedup: hash-groupBy on a 64-bit digest of normalized text — one
   shuffle keyed by digest, never by the text itself.
-- MinHash-LSH: signatures are a narrow projection (array exprs, no UDF);
-  the band→bucket groupBy is the only shuffle; candidate pairs are verified
-  with exact Jaccard only within buckets. No O(n²) stage anywhere.
+- MinHash-LSH: shingle hashes are a JVM projection and the k signature
+  minimums one numpy ``mapInArrow`` fold over them (only id + hash array
+  cross Arrow); the band→bucket groupBy is the only shuffle; candidate
+  pairs are verified with exact Jaccard only within buckets. No O(n²)
+  stage anywhere. ``minhash_dedup`` materializes its input once, so the
+  pair pipeline and the anti-join read the same rows.
 - embedding near-dup reuses the LSH bucketing from similarity.py.
 """
 
 from __future__ import annotations
 
+from typing import Iterator
+
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
-from metadata_enhanced_pretrain_datapipeline_spark.functions.hashing import md5_hash64, minhash_expr
+from metadata_enhanced_pretrain_datapipeline_spark.functions.hashing import md5_hash64
 from metadata_enhanced_pretrain_datapipeline_spark.functions.text import word_shingles
 
 
@@ -55,6 +63,8 @@ def _shingle_hash(s, portable: bool = False):
 # Per-component MinHash constants: deterministic (a, b) pairs derived from
 # small primes — public construction, seedless so reruns agree.
 _MINHASH_PARAMS = [(2 * i + 1, 7919 * (i + 1)) for i in range(32)]
+#: the Mersenne prime modulus of every component (hashing.minhash_expr's p)
+_MINHASH_P = (1 << 31) - 1
 
 
 def normalized_text_key(text: Column) -> Column:
@@ -80,40 +90,100 @@ def dedup_exact_text(df: DataFrame, text_col: str = "text",
     return keyed.withColumn("__rn", F.row_number().over(w)).filter("__rn = 1").drop("__k", "__rn")
 
 
-def minhash_signatures(df: DataFrame, text_col: str = "text", num_hashes: int = 32,
-                       shingle_n: int = 3, portable: bool = False) -> DataFrame:
-    """Per-doc MinHash signature: shingle → portable hash → k parallel
-    min-hashes. Pure array expressions (no UDF, no explode): the signature
-    column is computed inside whole-stage codegen.
-
-    The shingle-hash array is MATERIALIZED in its own projection before the
-    k min-hash columns are derived from it — Catalyst does not share
-    common subexpressions across sibling higher-order-function columns, so
-    deriving all k from the raw text would recompute shingling+md5 k times
-    (measured 16× slower). The input is also widened to full parallelism:
-    this stage is pure CPU (partitioning.ensure_min_partitions)."""
+def _shingle_hashes(df: DataFrame, text_col: str, shingle_n: int,
+                    portable: bool) -> DataFrame:
+    """``df`` plus ``__hashes``: the doc's distinct shingle hashes
+    (array<long>, JVM-side). An empty array for a doc with fewer than
+    ``shingle_n`` tokens, NULL for NULL text. The input is widened to
+    full parallelism: the stages above it are pure CPU
+    (partitioning.ensure_min_partitions)."""
     from metadata_enhanced_pretrain_datapipeline_spark.partitioning import ensure_min_partitions
 
     sh = word_shingles(F.col(text_col), n=shingle_n)
-    # array_distinct once before the k min-traversals: repeated shingles
-    # cannot change any min, and deduplicating them in ONE pass saves all
-    # k passes over the duplicates (~30% on the sf0.1 corpus)
-    hashed = ensure_min_partitions(df).withColumn(
+    # array_distinct once: repeated shingles cannot change any minimum,
+    # and deduplicating them here keeps them out of all k components
+    return ensure_min_partitions(df).withColumn(
         "__hashes", F.array_distinct(F.transform(sh, lambda s: _shingle_hash(s, portable)))
     )
-    # NOTE (r12): a single-pass fold of all k minimums (the simhash
-    # pattern — aggregate with an array<long> accumulator updated by
-    # zip_with) was tried and measured 1.4-1.9x SLOWER than these k
-    # array_min(transform(...)) passes (in-process alternating bench,
-    # k=8 and k=32): transform over primitive longs + array_min is far
-    # cheaper per element than a per-element k-wide zip_with allocation.
-    # simhash keeps the fused form because its per-BIT baseline was a
-    # full interpreted aggregate() per bit, not array_min.
-    sig_cols = [
-        minhash_expr(F.col("__hashes"), a, b).alias(f"mh_{i}")
-        for i, (a, b) in enumerate(_MINHASH_PARAMS[:num_hashes])
-    ]
-    return hashed.select("*", *sig_cols).drop("__hashes")
+
+
+def _minhash_arrays(hashes: "pa.ListArray", num_hashes: int) -> list["pa.Array"]:
+    """The k MinHash components of each row of an Arrow list<long>
+    column of shingle hashes: ``min((h % p * a + b) % p)`` with the
+    ``_MINHASH_PARAMS`` constants, exactly :func:`hashing.minhash_expr`'s
+    arithmetic. A NULL or empty row gets NULL components, as
+    ``array_min`` of NULL or of an empty array does. Shingle hashes are
+    never NULL elements (both hashes are defined on every string).
+
+    One ``np.minimum.reduceat`` per component over the list offsets:
+    the worker holds the hashes plus one scratch int64 per shingle,
+    never a k × shingles matrix (~0.9 GB at a 10k-row Arrow batch of
+    2 KB docs)."""
+    offs = np.asarray(hashes.offsets, dtype=np.int64)
+    lo, hi = int(offs[0]), int(offs[-1])
+    h = np.asarray(hashes.values.slice(lo, hi - lo), dtype=np.int64) % _MINHASH_P
+    lens = np.diff(offs)
+    nonempty = lens > 0
+    # each nonempty row opens a segment that runs to the next nonempty
+    # row's start, i.e. exactly its own elements
+    starts = offs[:-1][nonempty] - lo
+    null = ~nonempty
+    if hashes.null_count:
+        null |= np.asarray(hashes.is_null(), dtype=bool)
+    scratch = np.empty_like(h)
+    out = []
+    for a, b in _MINHASH_PARAMS[:num_hashes]:
+        mins = np.zeros(len(hashes), np.int64)
+        if len(starts):
+            np.multiply(h, a, out=scratch)
+            scratch += b
+            np.remainder(scratch, _MINHASH_P, out=scratch)
+            mins[nonempty] = np.minimum.reduceat(scratch, starts)
+        out.append(pa.array(mins, mask=null))
+    return out
+
+
+def _minhash_fold(hashed: DataFrame, num_hashes: int) -> DataFrame:
+    """``hashed`` (a :func:`_shingle_hashes` frame) with ``__hashes``
+    replaced by the ``mh_0..mh_{k-1}`` signature columns, computed by
+    :func:`_minhash_arrays` in one ``mapInArrow`` pass. Every other
+    column passes through unchanged, so callers project to the columns
+    they need first: whatever is left crosses Arrow twice."""
+    sig_names = [f"mh_{i}" for i in range(min(num_hashes, len(_MINHASH_PARAMS)))]
+    keep = [f for f in hashed.schema.fields if f.name != "__hashes"]
+    schema = StructType(keep + [StructField(n, LongType()) for n in sig_names])
+    names = [f.name for f in keep]
+
+    def fold(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+        for batch in batches:
+            sigs = _minhash_arrays(batch.column(batch.schema.get_field_index("__hashes")),
+                                   num_hashes)
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(batch.schema.get_field_index(n)) for n in names] + sigs,
+                names=names + sig_names)
+
+    return hashed.mapInArrow(fold, schema)
+
+
+def minhash_signatures(df: DataFrame, text_col: str = "text", num_hashes: int = 32,
+                       shingle_n: int = 3, portable: bool = False) -> DataFrame:
+    """Per-doc MinHash signature: ``df`` plus ``mh_0..mh_{k-1}`` (bigint;
+    NULL for a doc with no shingle). Shingling and hashing run JVM-side
+    (:func:`_shingle_hashes`); the k minimums are one numpy fold over the
+    hash arrays (:func:`_minhash_fold`), equal element for element to k
+    :func:`hashing.minhash_expr` columns and about half their cost (the
+    JVM form runs k ``array_min(transform(...))`` passes per doc).
+
+    All of ``df``'s columns, the text included, cross Arrow; the LSH
+    operators use :func:`_id_signatures`, which sends only the id."""
+    return _minhash_fold(_shingle_hashes(df, text_col, shingle_n, portable), num_hashes)
+
+
+def _id_signatures(df: DataFrame, id_col: str, text_col: str, num_hashes: int,
+                   shingle_n: int, portable: bool) -> DataFrame:
+    """(id, mh_*) signatures: only the id and the hash array cross Arrow."""
+    hashed = _shingle_hashes(df.select(id_col, text_col), text_col, shingle_n, portable)
+    return _minhash_fold(hashed.select(id_col, "__hashes"), num_hashes)
 
 
 def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
@@ -139,8 +209,7 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id", text_col: str = "te
             f"num_hashes ({num_hashes}) must be divisible by bands ({bands}); "
             "trailing signature components would be paid for but never banded"
         )
-    sigs = minhash_signatures(df.select(id_col, text_col), text_col, num_hashes,
-                              shingle_n, portable)
+    sigs = _id_signatures(df, id_col, text_col, num_hashes, shingle_n, portable)
     buckets = minhash_band_keys(sigs, id_col, num_hashes, bands, portable)
     return lsh_pairs_from_band_keys(buckets, id_col, max_bucket_size)
 
@@ -434,8 +503,7 @@ def minhash_dedup_against(new_docs: DataFrame, seen_bands: DataFrame,
     probed with the other keying silently matches nothing.
     """
     _check_band_store_probe(seen_bands, portable)
-    sigs = minhash_signatures(new_docs.select(id_col, text_col), text_col,
-                              num_hashes, shingle_n, portable)
+    sigs = _id_signatures(new_docs, id_col, text_col, num_hashes, shingle_n, portable)
     new_bands = minhash_band_keys(sigs, id_col, num_hashes, bands, portable)
     hits = (
         new_bands
@@ -474,8 +542,7 @@ def minhash_dedup_against_bands(new_docs: DataFrame, seen_bands: DataFrame,
     from metadata_enhanced_pretrain_datapipeline_spark.checkpointing import materialize
 
     _check_band_store_probe(seen_bands, portable)
-    sigs = minhash_signatures(new_docs.select(id_col, text_col), text_col,
-                              num_hashes, shingle_n, portable)
+    sigs = _id_signatures(new_docs, id_col, text_col, num_hashes, shingle_n, portable)
     new_bands = materialize(
         minhash_band_keys(sigs, id_col, num_hashes, bands, portable),
         eager=False)
@@ -1123,7 +1190,15 @@ def minhash_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
                   num_hashes: int = 32, bands: int = 8, shingle_n: int = 3,
                   max_bucket_size: int = 64, portable: bool = False) -> DataFrame:
     """End-to-end fuzzy dedup: MinHash-LSH candidate pairs → greedy
-    smaller-id-wins resolution → kept corpus."""
+    smaller-id-wins resolution → kept corpus.
+
+    The input feeds both the pair pipeline (under the drop set) and the
+    anti-join's left side, so it is materialized once (lazy, see
+    checkpointing.materialize): otherwise each consumer re-runs the
+    input's whole plan, e.g. a ``dedup_exact_text`` window shuffle."""
+    from metadata_enhanced_pretrain_datapipeline_spark.checkpointing import materialize
+
+    df = materialize(df, eager=False)
     pairs = minhash_lsh_pairs(df, id_col, text_col, num_hashes, bands,
                               shingle_n, max_bucket_size, portable)
     return drop_near_duplicates(df, pairs, id_col)
@@ -1435,13 +1510,10 @@ def duplicate_clusters(pairs: DataFrame, max_iterations: int = 64,
         CHECKPOINT_DIR_ENV, materialize)
 
     _reliable = checkpoint_dir or _os.environ.get(CHECKPOINT_DIR_ENV)
-    # The sum-based convergence witness below requires INTEGRAL ids: a
-    # non-numeric id column (e.g. string doc hashes, which the generic
-    # pair generators permit) casts to all-NULL decimals, the sum goes
-    # NULL, and convergence would be declared after round 1 with
-    # unpropagated labels — silently wrong clusters (ADVICE r12). Fail
-    # loudly up front instead; float ids are rejected too (min-label
-    # semantics on inexact values is not a contract this op makes).
+    # Ids must be INTEGRAL: cluster ids are minimum member ids, and
+    # min-label semantics on strings or inexact floats is not a contract
+    # this op makes. Non-numeric ids (e.g. string doc hashes, which the
+    # generic pair generators permit) are refused up front.
     _id_types = {t for c, t in pairs.dtypes if c in ("id_a", "id_b")}
     _bad = {t for t in _id_types
             if not (t in ("tinyint", "smallint", "int", "bigint")
@@ -1450,8 +1522,7 @@ def duplicate_clusters(pairs: DataFrame, max_iterations: int = 64,
         raise TypeError(
             "duplicate_clusters: id columns must be integral (got "
             f"{sorted(_bad)}); hash non-numeric ids to longs (e.g. "
-            "xxhash64) before pairing — the sum-based convergence "
-            "check is only exact over integers")
+            "xxhash64) before pairing")
     edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")).union(
         pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
     )
@@ -1479,25 +1550,19 @@ def duplicate_clusters(pairs: DataFrame, max_iterations: int = 64,
     labels = nodes.withColumn("label", F.col("id"))
     converged = False
     rounds = 0
-    # Seed the convergence witness with the INITIAL label sum (labels
-    # start as the node ids), computed over the just-materialized node
-    # set — one tiny aggregate. This (a) detects an already-at-fixpoint
-    # graph in round 1 (prev_sum=None could not, so max_iterations=1 on
-    # converged input raised — ADVICE r12), and (b) distinguishes the
-    # empty graph (sum over zero rows is NULL → trivially converged,
-    # skip the loop) from an arithmetic failure mid-loop, which now
-    # raises instead of silently mapping to converged=True.
-    prev_sum = nodes.agg(
-        F.sum(F.col("id").cast("decimal(38,0)"))).collect()[0][0]
-    if prev_sum is None:
+    if nodes.isEmpty():
         converged = True  # empty pair graph: nothing to propagate
         max_iterations = 0
     for _ in range(max_iterations):
         rounds += 1
+        # the self-loop edge also carries each node's own label into the
+        # round (__own), the witness the convergence count compares to
         propagated = (
             edges.join(labels, edges["dst"] == labels["id"])
-            .groupBy("src").agg(F.min("label").alias("label"))
-            .select(F.col("src").alias("id"), "label")
+            .groupBy("src").agg(
+                F.min("label").alias("label"),
+                F.min(F.when(F.col("src") == F.col("dst"), F.col("label"))).alias("__own"))
+            .select(F.col("src").alias("id"), "label", "__own")
         )
         # pointer doubling: l(u) <- min(l(u), l(l(u))). Every label value
         # is itself a node id in the graph, so the self-join always hits
@@ -1514,10 +1579,11 @@ def duplicate_clusters(pairs: DataFrame, max_iterations: int = 64,
                     F.col("label"),
                     F.coalesce(F.col("__jlabel"), F.col("label")),
                 ).alias("label"),
+                "__own",
             )
         )
         if checkpoint and not _reliable:
-            # LAZY localCheckpoint (r12): the convergence aggregate below
+            # LAZY localCheckpoint (r12): the convergence count below
             # is the round's only action, so it both computes the round
             # AND materializes the truncated blocks — ONE job per round
             # where eager-checkpoint-then-count ran two; the agg computes
@@ -1528,30 +1594,15 @@ def duplicate_clusters(pairs: DataFrame, max_iterations: int = 64,
             # (see materialize: a bare lazy .checkpoint() would
             # compute the round twice under a reliable dir)
             stepped = materialize(stepped, checkpoint_dir)
-        # labels only ever DECREASE, so their exact sum is a monotone
-        # convergence witness: sum unchanged between rounds ⟺ no label
-        # changed (every term can only fall). Summing as decimal(38,0)
-        # keeps it exact — n·2^63 ≈ 10^31 even at 10^12 nodes, far
-        # inside 38 digits — and spares the per-row __old carry + filter
-        # the old changed-count check needed.
-        cur_sum = stepped.agg(
-            F.sum(F.col("label").cast("decimal(38,0)"))
-        ).collect()[0][0]
-        labels = stepped
-        if cur_sum is None:
-            # the graph was nonempty at entry (the seed sum above was
-            # non-NULL), so a NULL sum here is an arithmetic failure
-            # (e.g. decimal overflow under non-ANSI mode), never "zero
-            # rows" — treating it as convergence would silently return
-            # half-propagated labels (ADVICE r12)
-            raise RuntimeError(
-                "duplicate_clusters: label sum came back NULL on a "
-                "nonempty graph — arithmetic failure in the convergence "
-                "aggregate; labels would be unreliable")
-        if cur_sum == prev_sum:
+        # labels only ever DECREASE (each new label is a min that
+        # includes the node's own), so "no label fell this round" is the
+        # fixpoint. A count of fallen labels cannot overflow, unlike a
+        # label sum over decimal(38,0) ids near 10^37.
+        changed = stepped.filter(F.col("label") < F.col("__own")).count()
+        labels = stepped.drop("__own")
+        if changed == 0:
             converged = True
             break
-        prev_sum = cur_sum
     if stats is not None:
         stats["iterations"] = rounds
         stats["converged"] = converged

@@ -6,18 +6,24 @@ container); the packing and binary-format logic — the part the reference
 actually implements (megatron_tokenizer.py:78-204,
 megatron_tokenizer_context.py:210-356) — is real.
 
-Physical shape for W2 packing: the running `offset_in_sequence` carries
-ACROSS documents (megatron_tokenizer_context.py:301-324), so output depends
-on document order. We pin order with repartitionByRange(shard).
-sortWithinPartitions(order) and fold per partition with mapInArrow:
-token arrays travel as Arrow int32 buffers end to end (no pickle, no
-per-token Python objects) and the sequential fold works on numpy views.
-Each partition ≡ one reference rank, which also starts fresh at offset 0
-(megatron_tokenizer_context.py:262) — parity documented.
+Physical shape: the running `offset_in_sequence` carries ACROSS documents
+(megatron_tokenizer_context.py:301-324), so output depends on document
+order. Every operator here shuffles (shard, order key, text) with
+repartitionByRange(shard).sortWithinPartitions(shard, order) and
+tokenizes AFTER the sort (:func:`_tokens_by_shard`): each doc is
+tokenized once, not again in the range-partitioning sample job and the
+shuffle map. One mapInArrow per partition then folds and, for the sinks,
+writes: token arrays travel as Arrow int32 buffers (no pickle, no
+per-token Python objects), the packing fold (:func:`_pack_fold`) works on
+numpy views, and the shard writer (:class:`_ShardFiles`) appends to the
+.bin files as the fold emits. Each partition ≡ one reference rank, which
+also starts fresh at offset 0 (megatron_tokenizer_context.py:262) —
+parity documented.
 """
 
 from __future__ import annotations
 
+import os
 import struct
 from typing import Iterator
 
@@ -94,6 +100,76 @@ def token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.withColumn("n_tokens", F.size(tokenize_ws(F.col(text_col))))
 
 
+def _tokens_by_shard(df: DataFrame, order_col: str, shards: int,
+                     texts: dict[str, Column], vocab_size: int = 50000) -> DataFrame:
+    """(shard, <name> token array per ``texts`` entry) rows, range-
+    partitioned by shard and sorted by (shard, ``order_col``); shard =
+    hash-bucket of the order key. The text crosses the exchange and is
+    tokenized above the sort, so the range-partitioning sample job and
+    the shuffle map never tokenize."""
+    arranged = df.select(
+        (md5_hash64(F.col(order_col)) % F.lit(shards)).alias("shard"),
+        F.col(order_col).alias("__ord"),
+        *[c.alias(f"__{name}") for name, c in texts.items()],
+    ).repartitionByRange(shards, "shard").sortWithinPartitions("shard", "__ord")
+    return arranged.select(
+        "shard", *[tokenize_ws(F.col(f"__{name}"), vocab_size).alias(name) for name in texts])
+
+
+def _shard_runs(shards_np: np.ndarray) -> Iterator[tuple[int, int, int]]:
+    """(shard, start, end) of each run of equal shards in a batch sorted
+    by shard."""
+    change = np.nonzero(np.diff(shards_np))[0] + 1
+    starts = np.concatenate(([0], change))
+    ends = np.concatenate((change, [len(shards_np)]))
+    for s, e in zip(starts, ends):
+        yield int(shards_np[s]), int(s), int(e)
+
+
+def _pack_fold(batches: Iterator["pa.RecordBatch"], seq_len: int, pad_id: int
+               ) -> Iterator[list[tuple[int, int, np.ndarray, int]]]:
+    """The W2 packing fold over (shard, toks) batches sorted by shard,
+    then document order: concatenate each shard's token stream into
+    seq_len sequences, carrying the remainder across documents and
+    batches, and pad each shard's final partial sequence with pad_id.
+
+    Yields, per input batch that completes a sequence and once for the
+    padded tails, a list of runs ``(shard, seq_idx of the run's first
+    sequence, the run's tokens flat (a multiple of seq_len), pad count of
+    the run's last sequence)``. The one fold behind
+    :func:`pack_sequences` (rows) and :func:`write_megatron_packed`
+    (shard files)."""
+    carry: dict[int, np.ndarray] = {}
+    counters: dict[int, int] = {}
+    empty = np.empty(0, np.int32)
+    for batch in batches:
+        shards_np = np.asarray(batch.column(batch.schema.get_field_index("shard")))
+        if len(shards_np) == 0:
+            continue
+        offs, vals = _list_views(batch.column(batch.schema.get_field_index("toks")))
+        runs = []
+        for sh, s, e in _shard_runs(shards_np):
+            chunk = vals[offs[s]:offs[e]]
+            prev = carry.get(sh, empty)
+            buf = np.concatenate((prev, chunk)) if len(prev) else chunk
+            n_full = len(buf) // seq_len
+            if n_full:
+                c = counters.get(sh, 0)
+                runs.append((sh, c, buf[: n_full * seq_len], 0))
+                counters[sh] = c + n_full
+            carry[sh] = np.array(buf[n_full * seq_len:], copy=True)
+        if runs:
+            yield runs
+    tails = []
+    for sh, buf in carry.items():
+        if len(buf):
+            pad = seq_len - len(buf)
+            tails.append((sh, counters.get(sh, 0),
+                          np.concatenate((buf, np.full(pad, pad_id, np.int32))), pad))
+    if tails:
+        yield tails
+
+
 def pack_sequences(df: DataFrame, order_col: str, text_col: str = "text",
                    seq_len: int = 4096, pad_id: int = 1,
                    shards: int = 8) -> DataFrame:
@@ -105,62 +181,19 @@ def pack_sequences(df: DataFrame, order_col: str, text_col: str = "text",
     Returns (shard, seq_idx, tokens array<int>, n_pad). Deterministic: shard
     = hash-bucket of order key ranges; docs sorted within shard.
     """
-    toks = df.select(
-        (md5_hash64(F.col(order_col)) % F.lit(shards)).alias("shard"),
-        F.col(order_col).alias("__ord"),
-        tokenize_ws(F.col(text_col)).alias("toks"),
-    )
-    arranged = toks.repartitionByRange(shards, "shard").sortWithinPartitions("shard", "__ord")
-
-    schema = "shard long, seq_idx long, tokens array<int>, n_pad int"
-    empty = np.empty(0, np.int32)
+    arranged = _tokens_by_shard(df, order_col, shards, {"toks": F.col(text_col)})
 
     def fold(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        # Arrow-native sequential fold: token arrays stay in contiguous
-        # int32 buffers end to end (no pickle, no per-token Python objects).
-        carry: dict[int, np.ndarray] = {}
-        counters: dict[int, int] = {}
-        for batch in batches:
-            i_shard = batch.schema.get_field_index("shard")
-            i_toks = batch.schema.get_field_index("toks")
-            shards_np = np.asarray(batch.column(i_shard))
-            if len(shards_np) == 0:
-                continue
-            offs, vals = _list_views(batch.column(i_toks))
-            out_s: list[int] = []; out_i: list[int] = []
-            out_t: list[np.ndarray] = []; out_p: list[int] = []
-            # rows arrive sorted by shard: process contiguous shard runs
-            change = np.nonzero(np.diff(shards_np))[0] + 1
-            starts = np.concatenate(([0], change))
-            ends = np.concatenate((change, [len(shards_np)]))
-            for s, e in zip(starts, ends):
-                sh = int(shards_np[s])
-                chunk = vals[offs[s]:offs[e]]
-                prev = carry.get(sh, empty)
-                buf = np.concatenate((prev, chunk)) if len(prev) else chunk
-                n_full = len(buf) // seq_len
-                if n_full:
-                    c = counters.get(sh, 0)
-                    out_s.extend([sh] * n_full)
-                    out_i.extend(range(c, c + n_full))
-                    out_t.append(buf[: n_full * seq_len])
-                    out_p.extend([0] * n_full)
-                    counters[sh] = c + n_full
-                carry[sh] = np.array(buf[n_full * seq_len:], copy=True)
-            if out_s:
-                yield from _seq_batch(out_s, out_i, out_t, out_p, seq_len)
-        tail_s: list[int] = []; tail_i: list[int] = []
-        tail_t: list[np.ndarray] = []; tail_p: list[int] = []
-        for sh, buf in carry.items():
-            if len(buf):
-                pad = seq_len - len(buf)
-                tail_s.append(sh); tail_i.append(counters.get(sh, 0))
-                tail_t.append(np.concatenate((buf, np.full(pad, pad_id, np.int32))))
-                tail_p.append(pad)
-        if tail_s:
-            yield from _seq_batch(tail_s, tail_i, tail_t, tail_p, seq_len)
+        for runs in _pack_fold(batches, seq_len, pad_id):
+            out_s: list[int] = []; out_i: list[int] = []; out_p: list[int] = []
+            for sh, first, flat, pad in runs:
+                n = len(flat) // seq_len
+                out_s.extend([sh] * n)
+                out_i.extend(range(first, first + n))
+                out_p.extend([0] * (n - 1) + [pad])
+            yield from _seq_batch(out_s, out_i, [r[2] for r in runs], out_p, seq_len)
 
-    return arranged.mapInArrow(fold, schema)
+    return arranged.mapInArrow(fold, "shard long, seq_idx long, tokens array<int>, n_pad int")
 
 
 # ---------------------------------------------------------------------------
@@ -173,71 +206,114 @@ def pack_sequences(df: DataFrame, order_col: str, text_col: str = "text",
 _MAGIC = b"MMIDIDX\x00\x00"
 
 
-def write_megatron_partition(token_lists: list[list[int]], bin_path: str,
-                             idx_path: str, vocab_size: int = 50000) -> int:
-    """Write one partition's docs as a .bin/.idx pair. dtype rule mirrors
-    the reference PipelineStepWithTokenizer.token_size exactly: int32 only
+def _token_dtype(vocab_size: int) -> tuple[type, int]:
+    """(numpy dtype, Megatron dtype code) of the token ids. Mirrors the
+    reference PipelineStepWithTokenizer.token_size exactly: int32 only
     when vocab_size > np.iinfo(np.uint16).max + 1 (= 65536), else uint16
-    (megatron_tokenizer.py:54-60,104-107). Returns total token count."""
-    dtype, code = (np.uint16, 8) if vocab_size <= 65536 else (np.int32, 4)
-    lengths, pointers, ptr = [], [], 0
-    with open(bin_path, "wb") as b:
-        for toks in token_lists:
-            arr = np.asarray(toks, dtype=dtype)
-            b.write(arr.tobytes(order="C"))
-            pointers.append(ptr)
-            lengths.append(len(toks))
-            ptr += arr.nbytes
+    (megatron_tokenizer.py:54-60,104-107)."""
+    return (np.uint16, 8) if vocab_size <= 65536 else (np.int32, 4)
+
+
+def _write_idx(idx_path: str, lengths: np.ndarray, code: int, itemsize: int) -> None:
+    """The .idx of a .bin holding documents of ``lengths`` tokens back to
+    back: magic, version, dtype code, counts, int32 lengths, int64 byte
+    pointers, int64 document indices."""
+    nbytes = lengths.astype(np.int64) * itemsize
     with open(idx_path, "wb") as i:
         i.write(_MAGIC)
         i.write(struct.pack("<Q", 1))
         i.write(struct.pack("<B", code))
         i.write(struct.pack("<Q", len(lengths)))
         i.write(struct.pack("<Q", len(lengths) + 1))
-        i.write(np.asarray(lengths, dtype=np.int32).tobytes(order="C"))
-        i.write(np.asarray(pointers, dtype=np.int64).tobytes(order="C"))
+        i.write(lengths.astype(np.int32).tobytes(order="C"))
+        i.write((np.cumsum(nbytes) - nbytes).tobytes(order="C"))
         i.write(np.arange(len(lengths) + 1, dtype=np.int64).tobytes(order="C"))
-    return int(sum(lengths))
+
+
+def write_megatron_partition(token_lists: list[list[int]], bin_path: str,
+                             idx_path: str, vocab_size: int = 50000) -> int:
+    """Write one partition's docs as a .bin/.idx pair (dtype rule:
+    :func:`_token_dtype`). Returns total token count."""
+    dtype, code = _token_dtype(vocab_size)
+    arrays = [np.asarray(toks, dtype=dtype) for toks in token_lists]
+    with open(bin_path, "wb") as b:
+        for arr in arrays:
+            b.write(arr.tobytes(order="C"))
+    lengths = np.array([len(a) for a in arrays], np.int64)
+    _write_idx(idx_path, lengths, code, np.dtype(dtype).itemsize)
+    return int(lengths.sum())
+
+
+class _ShardFiles:
+    """One task's Megatron shard writer: a ``shard_NNNNN.bin``/``.idx``
+    pair per shard under ``out_dir``, one per reference rank
+    (get_output_filename, megatron_tokenizer.py:207-209). ``append``
+    streams a shard's next documents into its .bin; leaving the ``with``
+    block closes every .bin and, unless it raised, writes every .idx.
+    :meth:`summary` then yields the per-shard token totals, the only
+    thing that reaches the driver."""
+
+    def __init__(self, out_dir: str, vocab_size: int):
+        self.out_dir = out_dir
+        self.dtype, self.code = _token_dtype(vocab_size)
+        self._bins: dict = {}
+        self._lengths: dict[int, list[np.ndarray]] = {}
+
+    def _base(self, shard: int) -> str:
+        return os.path.join(self.out_dir, f"shard_{shard:05d}")
+
+    def append(self, shard: int, flat: np.ndarray, lengths: np.ndarray) -> None:
+        """Append documents of ``lengths`` tokens, back to back in ``flat``."""
+        f = self._bins.get(shard)
+        if f is None:
+            f = self._bins[shard] = open(self._base(shard) + ".bin", "wb")
+            self._lengths[shard] = []
+        f.write(flat.astype(self.dtype, copy=False).tobytes(order="C"))
+        self._lengths[shard].append(lengths)
+
+    def __enter__(self) -> "_ShardFiles":
+        return self
+
+    def __exit__(self, exc_type, exc, tb) -> None:
+        for f in self._bins.values():
+            f.close()
+        if exc_type is None:
+            itemsize = np.dtype(self.dtype).itemsize
+            for shard, parts in self._lengths.items():
+                _write_idx(self._base(shard) + ".idx", np.concatenate(parts),
+                           self.code, itemsize)
+
+    def summary(self) -> Iterator["pa.RecordBatch"]:
+        if self._lengths:
+            shards = sorted(self._lengths)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(shards, pa.int64()),
+                 pa.array([int(sum(p.sum() for p in self._lengths[s])) for s in shards],
+                          pa.int64())],
+                ["shard", "n_tokens"])
 
 
 def write_megatron(df: DataFrame, out_dir: str, text_col: str = "text",
                    order_col: str = "doc_id", shards: int = 4,
                    vocab_size: int = 50000) -> None:
-    """Distributed K4 sink: one .bin/.idx pair per shard ≈ per reference
-    rank (get_output_filename, megatron_tokenizer.py:207-209). Writes run
-    executor-side inside mapInArrow (tokens as Arrow buffers, never
-    pickled rows); only the tiny per-shard token-count summary reaches
-    the driver."""
-    import os
-
-    toks = df.select(
-        (md5_hash64(F.col(order_col)) % F.lit(shards)).alias("shard"),
-        F.col(order_col).alias("__ord"),
-        tokenize_ws(F.col(text_col), vocab_size).alias("toks"),
-    ).repartitionByRange(shards, "shard").sortWithinPartitions("shard", "__ord")
-
+    """Distributed K4 sink, one Megatron document per input doc: one
+    .bin/.idx pair per shard (:class:`_ShardFiles`), docs in order-key
+    order. Writes run executor-side inside mapInArrow."""
+    arranged = _tokens_by_shard(df, order_col, shards, {"toks": F.col(text_col)}, vocab_size)
     os.makedirs(out_dir, exist_ok=True)
 
     def write_part(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        by_shard: dict[int, list[np.ndarray]] = {}
-        for batch in batches:
-            shards_np = np.asarray(batch.column(batch.schema.get_field_index("shard")))
-            offs, vals = _list_views(batch.column(batch.schema.get_field_index("toks")))
-            for i in range(len(shards_np)):
-                by_shard.setdefault(int(shards_np[i]), []).append(vals[offs[i]:offs[i + 1]])
-        out = []
-        for shard, docs in by_shard.items():
-            base = os.path.join(out_dir, f"shard_{shard:05d}")
-            n = write_megatron_partition(docs, base + ".bin", base + ".idx", vocab_size)
-            out.append((shard, n))
-        if out:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([s for s, _ in out], pa.int64()),
-                 pa.array([n for _, n in out], pa.int64())],
-                ["shard", "n_tokens"],
-            )
+        with _ShardFiles(out_dir, vocab_size) as files:
+            for batch in batches:
+                shards_np = np.asarray(batch.column(batch.schema.get_field_index("shard")))
+                if len(shards_np) == 0:
+                    continue
+                offs, vals = _list_views(batch.column(batch.schema.get_field_index("toks")))
+                for sh, s, e in _shard_runs(shards_np):
+                    files.append(sh, vals[offs[s]:offs[e]], np.diff(offs[s:e + 1]))
+        yield from files.summary()
 
-    toks.mapInArrow(write_part, "shard long, n_tokens long").collect()
+    arranged.mapInArrow(write_part, "shard long, n_tokens long").collect()
 
 
 # ---------------------------------------------------------------------------
@@ -268,13 +344,10 @@ def pack_with_metadata(df: DataFrame, order_col: str, text_col: str = "text",
     boundary: if it does not fit in the current sequence's remainder, the
     remainder is padded and the run starts the next sequence (:302).
     """
-    toks = df.select(
-        (md5_hash64(F.col(order_col)) % F.lit(shards)).alias("shard"),
-        F.col(order_col).alias("__ord"),
-        tokenize_ws(F.col(text_col), vocab_size).alias("toks"),
-        tokenize_ws(F.substring(F.col(meta_col), 1, meta_max_chars), vocab_size).alias("mtoks"),
-    )
-    arranged = toks.repartitionByRange(shards, "shard").sortWithinPartitions("shard", "__ord")
+    arranged = _tokens_by_shard(
+        df, order_col, shards,
+        {"toks": F.col(text_col), "mtoks": F.substring(F.col(meta_col), 1, meta_max_chars)},
+        vocab_size)
 
     schema = "shard long, seq_idx long, tokens array<int>, n_pad int, n_meta_tokens int"
 
@@ -387,41 +460,23 @@ def write_megatron_packed(df: DataFrame, out_dir: str, order_col: str = "doc_id"
                           text_col: str = "text", seq_len: int = 4096,
                           shards: int = 4, vocab_size: int = 50000) -> None:
     """K4 ∘ W2 — the reference's actual flow: tokenize → pack into fixed
-    seq_len sequences → write one .bin/.idx pair per shard, each packed
-    sequence one Megatron 'document' (megatron_tokenizer_context.py:210-356
-    feeding MegatronTokenizedFile). pack_sequences already range-partitions
-    by shard and mapInArrow preserves that partitioning, so the writer
-    reuses it — no second shuffle. Executor-side writes; only a tiny
-    per-shard summary reaches the driver."""
-    import os
-
-    packed = pack_sequences(df, order_col, text_col, seq_len=seq_len, shards=shards)
+    seq_len sequences (pad id 1) → write one .bin/.idx pair per shard,
+    each packed sequence one Megatron 'document'
+    (megatron_tokenizer_context.py:210-356 feeding MegatronTokenizedFile).
+    One mapInArrow runs the :func:`pack_sequences` fold and writes its
+    sequences as they complete, so packed tokens never return to the
+    JVM. Only a tiny per-shard summary reaches the driver."""
+    arranged = _tokens_by_shard(df, order_col, shards, {"toks": F.col(text_col)}, vocab_size)
     os.makedirs(out_dir, exist_ok=True)
 
     def write_part(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        by_shard: dict[int, list[tuple[int, np.ndarray]]] = {}
-        for batch in batches:
-            shards_np = np.asarray(batch.column(batch.schema.get_field_index("shard")))
-            idx_np = np.asarray(batch.column(batch.schema.get_field_index("seq_idx")))
-            offs, vals = _list_views(batch.column(batch.schema.get_field_index("tokens")))
-            for i in range(len(shards_np)):
-                by_shard.setdefault(int(shards_np[i]), []).append(
-                    (int(idx_np[i]), vals[offs[i]:offs[i + 1]]))
-        out = []
-        for shard, seqs in by_shard.items():
-            seqs.sort(key=lambda p: p[0])
-            base = os.path.join(out_dir, f"shard_{shard:05d}")
-            n = write_megatron_partition([t for _, t in seqs], base + ".bin",
-                                         base + ".idx", vocab_size)
-            out.append((shard, n))
-        if out:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([s for s, _ in out], pa.int64()),
-                 pa.array([n for _, n in out], pa.int64())],
-                ["shard", "n_tokens"],
-            )
+        with _ShardFiles(out_dir, vocab_size) as files:
+            for runs in _pack_fold(batches, seq_len, pad_id=1):
+                for sh, _, flat, _ in runs:
+                    files.append(sh, flat, np.full(len(flat) // seq_len, seq_len))
+        yield from files.summary()
 
-    packed.mapInArrow(write_part, "shard long, n_tokens long").collect()
+    arranged.mapInArrow(write_part, "shard long, n_tokens long").collect()
 
 
 def read_megatron_partition(bin_path: str, idx_path: str) -> tuple[np.ndarray, np.ndarray]:

@@ -1,3 +1,4 @@
+import pytest
 from pyspark.sql import functions as F
 
 from metadata_enhanced_pretrain_datapipeline_spark.operators import dedup
@@ -1011,3 +1012,102 @@ def test_token_set_cap_excludes_hot_token_keeps_full_sizes(spark):
         df, "media_id", "token", min_jaccard=0.4, max_bucket_size=2)
     got = {(r.id_a, r.id_b): r.jaccard for r in out.collect()}
     assert got == {("D", "E"): 1.0}
+
+
+def _kernel_docs(spark):
+    rows = [
+        (1, "the quick brown fox jumps over the lazy dog the quick brown"),
+        (2, "a b c a b c a b c"),  # repeated shingles
+        (3, "two words"),  # fewer tokens than the shingle width
+        (4, ""),
+        (5, None),
+        (6, "  spaced   out   text   with   runs  "),
+    ] + [(10 + i, " ".join(f"w{(i * 7 + j) % 50}" for j in range(40 + i)))
+         for i in range(30)]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+@pytest.mark.parametrize("portable", [False, True])
+@pytest.mark.parametrize("num_hashes", [4, 8, 32])
+def test_minhash_kernel_equals_jvm_reference(spark, portable, num_hashes):
+    """The numpy signature fold equals k minhash_expr columns (the JVM
+    reference, which the DuckDB oracle twin mirrors) element for element;
+    shingle-less and NULL docs get NULL components, as array_min does."""
+    from metadata_enhanced_pretrain_datapipeline_spark.functions.hashing import minhash_expr
+
+    df = _kernel_docs(spark)
+    cols = [f"mh_{i}" for i in range(num_hashes)]
+    got = {r.doc_id: (r.text, tuple(r[c] for c in cols)) for r in
+           dedup.minhash_signatures(df, num_hashes=num_hashes, portable=portable).collect()}
+    ref = dedup._shingle_hashes(df, "text", 3, portable).select(
+        "doc_id", "text", *[minhash_expr(F.col("__hashes"), a, b).alias(c)
+                            for c, (a, b) in zip(cols, dedup._MINHASH_PARAMS)])
+    want = {r.doc_id: (r.text, tuple(r[c] for c in cols)) for r in ref.collect()}
+    assert got == want
+    assert all(v is None for d in (3, 4, 5) for v in got[d][1])
+    assert all(v is not None for v in got[1][1])
+
+
+def test_minhash_arrays_match_loop_on_sliced_lists():
+    """Offsets of a sliced Arrow list column (non-zero first offset),
+    NULL and empty rows: the reduceat segments match a per-row loop."""
+    import numpy as np
+    import pyarrow as pa
+
+    rng = np.random.default_rng(0)
+    lists = [None if i % 7 == 3 else rng.integers(0, 1 << 62, size=int(rng.integers(0, 6))).tolist()
+             for i in range(60)]
+    arr = pa.array(lists, pa.list_(pa.int64())).slice(5, 50)
+    got = [c.to_pylist() for c in dedup._minhash_arrays(arr, 8)]
+    p = (1 << 31) - 1
+    for i, (a, b) in enumerate(dedup._MINHASH_PARAMS[:8]):
+        assert got[i] == [min((h % p * a + b) % p for h in hs) if hs else None
+                          for hs in lists[5:55]]
+
+
+def _physical_nodes(spark, df):
+    """Every node of df's physical plan, each cached relation's plan
+    walked once however many scans read it."""
+    seen, out, stack = set(), [], [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        if name == "InMemoryRelation":
+            ident = spark._jvm.System.identityHashCode(node.cacheBuilder())
+            if ident in seen:
+                continue
+            seen.add(ident)
+        out.append(node)
+        if name == "AdaptiveSparkPlan":
+            stack.append(node.executedPlan())
+        for seq in (node.children(), node.innerChildren()):
+            stack.extend(seq.apply(i) for i in range(seq.size()))
+    return out
+
+
+def test_minhash_dedup_plans_its_input_once(spark, docs):
+    """The pair pipeline and the anti-join read one materialized input:
+    the exact-dedup window exchange (on its __k digest) is planned once."""
+    exact = dedup.dedup_exact_text(docs)
+    kept = dedup.minhash_dedup(exact, num_hashes=8, bands=4)
+    exchanges = [n.simpleString(100) for n in _physical_nodes(spark, kept)
+                 if n.nodeName() == "Exchange"]
+    assert sum("hashpartitioning(__k" in e for e in exchanges) == 1, exchanges
+    assert sorted(r.doc_id for r in kept.collect()) == sorted(
+        r.doc_id for r in dedup.drop_near_duplicates(
+            exact, dedup.minhash_lsh_pairs(exact, num_hashes=8, bands=4)).collect())
+
+
+def test_duplicate_clusters_decimal_ids_near_1e37(spark):
+    """decimal(38,0) ids whose sum overflows 38 digits: emptiness and
+    convergence must not depend on a label sum."""
+    from decimal import Decimal
+
+    ids = [10 ** 37 + 7 * i for i in range(12)]  # sum ~1.2e38
+    pairs = spark.createDataFrame([(Decimal(a), Decimal(b)) for a, b in zip(ids, ids[1:])],
+                                  "id_a decimal(38,0), id_b decimal(38,0)")
+    stats = {}
+    got = {int(r.doc_id): int(r.cluster_id)
+           for r in dedup.duplicate_clusters(pairs, stats=stats).collect()}
+    assert got == {i: ids[0] for i in ids}
+    assert stats["converged"] is True

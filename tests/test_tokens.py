@@ -92,3 +92,77 @@ def test_read_megatron_rejects_bad_magic(tmp_path):
     (tmp_path / "corrupt.bin").write_bytes(b"\x00" * 8)
     with pytest.raises(ValueError, match="bad magic"):
         read_megatron_partition(str(tmp_path / "corrupt.bin"), str(bad))
+
+
+def _executed_plan_of(spark, action) -> str:
+    """The final physical plan, one node per line, of the one SQL
+    execution ``action`` runs (read from the SQL status store, so
+    operators that build and collect their own frame can be audited)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def latest(k):  # the k most recent retained executions, oldest first
+        n = store.executionsCount()
+        runs = store.executionsList(max(0, n - k), k)
+        return [runs.apply(i) for i in range(runs.size())]
+
+    conf = "spark.sql.ui.explainMode"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "simple")
+    try:
+        before = max([e.executionId() for e in latest(1)], default=-1)
+        action()
+    finally:
+        spark.conf.set(conf, prev)
+    plans = [e.physicalPlanDescription() for e in latest(5) if e.executionId() > before]
+    assert len(plans) == 1, plans
+    # the adaptive plan prints the plan it ran, then the initial one
+    plan = plans[0].split("== Initial Plan ==")[0]
+    return plan.split("== Final Plan ==")[-1].split("== Current Plan ==")[-1]
+
+
+def test_write_megatron_packed_tokenizes_once_in_one_python_pass(spark, docs, tmp_path):
+    """Text crosses the range exchange and is tokenized above it (the
+    range sample job and the shuffle map never tokenize), and one
+    mapInArrow packs and writes (packed tokens never return to the JVM)."""
+    plan = _executed_plan_of(spark, lambda: tokens.write_megatron_packed(
+        docs, str(tmp_path / "m"), seq_len=64, shards=2))
+    lines = plan.splitlines()
+    assert sum("MapInArrow" in line for line in lines) == 1, plan
+    (ex,) = [i for i, line in enumerate(lines)
+             if "Exchange rangepartitioning" in line]
+    tokenizes = ["transform(" in line and "md5(" in line for line in lines]
+    assert any(tokenizes[:ex]) and not any(tokenizes[ex:]), plan
+
+
+def test_packed_shards_hold_the_pack_sequences_rows(spark, docs, tmp_path):
+    """The sink and pack_sequences share one fold: each shard file holds
+    exactly that shard's packed sequences, in seq_idx order."""
+    from metadata_enhanced_pretrain_datapipeline_spark.operators.tokens import read_megatron_partition
+
+    out = str(tmp_path / "m")
+    tokens.write_megatron_packed(docs, out, seq_len=64, shards=3)
+    rows = tokens.pack_sequences(docs, "doc_id", seq_len=64, shards=3).collect()
+    for shard in {r.shard for r in rows}:
+        seqs = sorted((r.seq_idx, r.tokens) for r in rows if r.shard == shard)
+        base = f"{out}/shard_{shard:05d}"
+        lengths, flat = read_megatron_partition(base + ".bin", base + ".idx")
+        assert lengths.tolist() == [64] * len(seqs)
+        assert flat.tolist() == [t for _, s in seqs for t in s]
+
+
+def test_write_megatron_shards_hold_docs_in_order(spark, docs, tmp_path):
+    """One Megatron document per input doc, in order-key order per shard."""
+    from metadata_enhanced_pretrain_datapipeline_spark.functions.hashing import md5_hash64
+    from metadata_enhanced_pretrain_datapipeline_spark.operators.tokens import read_megatron_partition
+
+    out = str(tmp_path / "m")
+    tokens.write_megatron(docs, out, shards=2)
+    want = docs.select(
+        (md5_hash64(F.col("doc_id")) % 2).alias("shard"), "doc_id",
+        tokens.tokenize_ws(F.col("text")).alias("toks")).collect()
+    for shard in (0, 1):
+        mine = sorted((r.doc_id, r.toks) for r in want if r.shard == shard)
+        base = f"{out}/shard_{shard:05d}"
+        lengths, flat = read_megatron_partition(base + ".bin", base + ".idx")
+        assert lengths.tolist() == [len(t) for _, t in mine]
+        assert flat.tolist() == [t for _, toks in mine for t in toks]
