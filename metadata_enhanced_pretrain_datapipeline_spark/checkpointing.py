@@ -69,7 +69,15 @@ def materialize(df: DataFrame, checkpoint_dir: str | None = None,
     same accumulation localCheckpoint had, now evictable/recomputable.
     Callers that need true lineage truncation (iterative plan growth)
     use ``eager=True``, which keeps localCheckpoint locally.
+
+    ``eager=False`` returns a bare file scan unchanged: re-reading the
+    files costs no more than reading a cache, and a cached scan would
+    stand in for every later read of the same files in the session,
+    which then lose their column pruning.
     """
+    scan = df._jdf.queryExecution().analyzed().getClass().getSimpleName() == "LogicalRelation"
+    if scan and not eager:
+        return df
     target = checkpoint_dir or os.environ.get(CHECKPOINT_DIR_ENV)
     if target:
         sc = df.sparkSession.sparkContext

@@ -71,26 +71,40 @@ def char_ngrams(text: Column, n: int = 5) -> Column:
     return F.array_distinct(F.transform(starts, lambda i: text.substr(i, F.lit(n))))
 
 
+def _bind(col: Column, fn) -> Column:
+    """``fn(col)`` with ``col`` lambda-bound ONCE (transform over a
+    1-element array, the word_shingles trick): sibling references get no
+    CSE inside a projection or a lambda, so every free-standing reference
+    to a computed column would re-evaluate it."""
+    return F.get(F.transform(F.array(col), fn), 0)
+
+
+def _avg_token_len(toks: Column) -> Column:
+    # try_divide: empty docs yield NULL instead of an ANSI
+    # DIVIDE_BY_ZERO aborting the job. Exact sum of token lengths —
+    # the (chars - n + 1)/n shortcut assumes single-space separators
+    # and inflates on runs of whitespace (code, tables).
+    return F.try_divide(
+        F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t)), F.size(toks))
+
+
+def _stopword_count(toks: Column) -> Column:
+    # occurrence count, not distinct-type count (array_intersect dedupes,
+    # which would decay the ratio toward 0 on long docs)
+    stop = F.array([F.lit(w) for w in STOPWORDS])
+    return F.size(F.filter(toks, lambda x: F.array_contains(stop, x)))
+
+
 def quality_stats(text: Column) -> dict[str, Column]:
     """Length / punctuation / stopword-ratio quality features
     (the datatrove-style quality-signal family, computed relationally)."""
     toks = tokens_ws(text)
     n_toks = F.size(toks)
-    stop = F.array([F.lit(w) for w in STOPWORDS])
-    # occurrence count, not distinct-type count (array_intersect dedupes,
-    # which would decay the ratio toward 0 on long docs)
-    n_stop = F.size(F.filter(toks, lambda x: F.array_contains(stop, x)))
     return {
         "n_chars": F.length(text),
         "n_tokens": n_toks,
-        # try_divide: empty docs yield NULL instead of an ANSI
-        # DIVIDE_BY_ZERO aborting the job. Exact sum of token lengths —
-        # the (chars - n + 1)/n shortcut assumes single-space separators
-        # and inflates on runs of whitespace (code, tables).
-        "avg_token_len": F.try_divide(
-            F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t)), n_toks
-        ),
-        "stopword_ratio": F.try_divide(n_stop.cast("double"), n_toks),
+        "avg_token_len": _avg_token_len(toks),
+        "stopword_ratio": F.try_divide(_stopword_count(toks).cast("double"), n_toks),
         # unicode-aware: [^\w\s] is ASCII-word in Java regex, so accented
         # letters would count as punctuation
         "punct_count": F.size(F.regexp_extract_all(text, F.lit(r"[^\p{L}\p{N}\s]"), F.lit(0))),
@@ -146,7 +160,7 @@ def repetition_signals(text: Column) -> Column:
             F.try_divide(dup_chars.cast("double"), total_chars).alias("dup_line_char_frac"),
         )
 
-    return F.get(F.transform(F.array(lines_expr), body), 0)
+    return _bind(lines_expr, body)
 
 
 def ngram_repetition_signals(text: Column, top_n: int = 2,
@@ -183,14 +197,6 @@ def ngram_repetition_signals(text: Column, top_n: int = 2,
             ),
         ).otherwise(F.array().cast("array<string>"))
 
-    def bind(col: Column, fn) -> Column:
-        # lambda-bind an intermediate so every reference is a variable
-        # lookup, not a re-evaluation (no CSE inside a projection — the
-        # word_shingles lesson; the unbound version of this function
-        # re-built the gram arrays per distinct gram AND per position:
-        # 351s for 500 docs at sf0.01, ~0.5s bound)
-        return F.get(F.transform(F.array(col), fn), 0)
-
     def per_counts(g: Column) -> Column:
         return F.transform(
             F.array_distinct(g),
@@ -198,13 +204,16 @@ def ngram_repetition_signals(text: Column, top_n: int = 2,
                 d.alias("g"),
                 F.size(F.filter(g, lambda x: x == d)).alias("cnt")))
 
+    # every intermediate is bound (_bind): the unbound version of this
+    # function re-built the gram arrays per distinct gram AND per
+    # position (351s for 500 docs at sf0.01, ~0.5s bound)
     def body(toks: Column) -> Column:
         n_t = F.size(toks)
         total_chars = F.aggregate(
             toks, F.lit(0), lambda acc, t: acc + F.length(t))
 
         def top_frac(per: Column) -> Column:
-            return bind(
+            return _bind(
                 F.array_max(F.transform(per, lambda s: s["cnt"])),
                 lambda max_cnt: F.when(
                     n_t >= F.lit(top_n),
@@ -232,10 +241,10 @@ def ngram_repetition_signals(text: Column, top_n: int = 2,
                 n_t >= F.lit(dup_n),
                 F.try_divide(covered.cast("double"), total_chars))
 
-        return bind(grams(toks, top_n), lambda gt:
-                    bind(grams(toks, dup_n), lambda gd:
-                         bind(per_counts(gt), lambda per:
-                              bind(F.transform(
+        return _bind(grams(toks, top_n), lambda gt:
+                    _bind(grams(toks, dup_n), lambda gd:
+                         _bind(per_counts(gt), lambda per:
+                              _bind(F.transform(
                                   F.filter(per_counts(gd),
                                            lambda s: s["cnt"] >= 2),
                                   lambda s: s["g"]),
@@ -245,7 +254,7 @@ def ngram_repetition_signals(text: Column, top_n: int = 2,
                                       dup_frac(gd, dup_set)
                                       .alias("dup_ngram_char_frac"))))))
 
-    return F.get(F.transform(F.array(tokens_ws(text)), body), 0)
+    return _bind(tokens_ws(text), body)
 
 
 #: tiny per-language stopword lists for the n-gram language-ID heuristic
@@ -261,6 +270,28 @@ LANG_MARKERS = {
 
 #: quality-feature stopword list (shared with q_quality_score).
 STOPWORDS = ("the", "a", "of", "to", "and", "in", "is")
+
+
+def _gopher_signals(t: Column, toks: Column) -> Column:
+    """The :func:`gopher_quality_signals` struct over a bound text ``t``
+    and its bound ``tokens_ws`` array ``toks``; the line array is bound
+    here."""
+    def frac(arr: Column, pattern: str) -> Column:
+        return F.round(F.try_divide(
+            F.size(F.filter(arr, lambda x: x.rlike(pattern))).cast("double"),
+            F.size(arr)), 6)
+
+    n_symbols = (F.size(F.regexp_extract_all(t, F.lit("#"), F.lit(0)))
+                 + F.size(F.regexp_extract_all(t, F.lit(r"\.\.\.|\u2026"), F.lit(0))))
+    return _bind(
+        F.filter(F.transform(F.split(t, "\n"), lambda l: F.trim(l)), lambda l: l != ""),
+        lambda lines: F.struct(
+            frac(toks, r"\p{L}").alias("alpha_word_frac"),
+            frac(lines, r"^(- |\* |\u2022)").alias("bullet_line_frac"),
+            frac(lines, r"(\.\.\.|\u2026)$").alias("ellipsis_line_frac"),
+            F.round(F.try_divide(n_symbols.cast("double"), F.size(toks)), 6)
+            .alias("symbol_word_ratio"),
+        ))
 
 
 def gopher_quality_signals(text: Column) -> Column:
@@ -285,54 +316,9 @@ def gopher_quality_signals(text: Column) -> Column:
     bit-portable cross-engine; word/line-less documents yield NULLs
     (try_divide), which every Gopher comparison treats as not-passing.
     Pure array/regexp expressions — narrow projection, no shuffle, no
-    Python; the token and line arrays are lambda-BOUND once each (the
-    word_shingles trick — sibling references get no CSE)."""
-    def sig_of(t):
-        return F.get(
-        F.transform(
-            F.array(tokens_ws(t)),
-            lambda toks: F.get(
-                F.transform(
-                    F.array(F.filter(
-                        F.transform(F.split(t, "\n"),
-                                    lambda l: F.trim(l)),
-                        lambda l: l != "")),
-                    lambda lines: F.struct(
-                        F.round(F.try_divide(
-                            F.size(F.filter(
-                                toks,
-                                lambda t: t.rlike(r"\p{L}"))).cast("double"),
-                            F.size(toks)), 6).alias("alpha_word_frac"),
-                        F.round(F.try_divide(
-                            F.size(F.filter(
-                                lines,
-                                lambda l: l.rlike(
-                                    r"^(- |\* |\u2022)"))).cast("double"),
-                            F.size(lines)), 6).alias("bullet_line_frac"),
-                        F.round(F.try_divide(
-                            F.size(F.filter(
-                                lines,
-                                lambda l: l.rlike(
-                                    r"(\.\.\.|\u2026)$"))).cast("double"),
-                            F.size(lines)), 6).alias("ellipsis_line_frac"),
-                        F.round(F.try_divide(
-                            (F.size(F.regexp_extract_all(
-                                t, F.lit("#"), F.lit(0)))
-                             + F.size(F.regexp_extract_all(
-                                 t, F.lit(r"\.\.\.|\u2026"),
-                                 F.lit(0)))).cast("double"),
-                            F.size(toks)), 6).alias("symbol_word_ratio"),
-                    ),
-                ),
-                0,
-            ),
-        ),
-        0,
-        )
-
-    # bind a COMPUTED text expression once (fixtures synthesize pages;
-    # unbound references re-evaluate the page per use — see keep below)
-    return F.get(F.transform(F.array(text), lambda t: sig_of(t)), 0)
+    Python; the text, token and line arrays are bound once each
+    (:func:`_bind`)."""
+    return _bind(text, lambda t: _bind(tokens_ws(t), lambda toks: _gopher_signals(t, toks)))
 
 
 def gopher_quality_keep(text: Column, min_words: int = 50,
@@ -348,38 +334,30 @@ def gopher_quality_keep(text: Column, min_words: int = 50,
     published behavior. Thresholds compare 6dp-rounded fractions, so
     the flag is bit-portable cross-engine.
 
+    One evaluation per row: the text, its token array and the signals
+    struct are each bound once (:func:`_bind`), so the page is split
+    once into tokens and once into lines, and every rule reads those
+    arrays. The word count, mean length and stopword count are
+    :func:`quality_stats`' expressions over the same bound tokens.
+
     ``signals``: an ALREADY-COMPUTED :func:`gopher_quality_signals`
-    struct. Callers that select the signals beside the keep flag must
-    compute the struct in a prior projection and pass its attribute
-    here (the q_script_detect compute-once-then-derive lesson, r10:
-    codegen does not CSE across separate transform() lambda trees, so
-    omitting it re-runs the whole signal suite inside the keep)."""
-    # ``text`` may be a COMPUTED expression (the registered fixture
-    # synthesizes a page) — bind it ONCE as a lambda variable before the
-    # many references below (quality_stats + signals + the stopword
-    # filter re-evaluate their argument per reference; the unbound form
-    # measured 54x/decade on the synthesized fixture vs linear bound).
-    def checks_of(t):
-        qs = quality_stats(t)
-        g = signals if signals is not None else gopher_quality_signals(t)
-        mean_len = F.round(qs["avg_token_len"], 6)
-        return (
-            (qs["n_tokens"] >= F.lit(min_words))
-            & (qs["n_tokens"] <= F.lit(max_words))
+    struct, for callers that also select the struct beside the flag;
+    the keep then reads it instead of computing the signals again."""
+    def checks_of(t: Column, toks: Column) -> Column:
+        n_toks = F.size(toks)
+        mean_len = F.round(_avg_token_len(toks), 6)
+        return _bind(signals if signals is not None else _gopher_signals(t, toks), lambda g: (
+            (n_toks >= F.lit(min_words))
+            & (n_toks <= F.lit(max_words))
             & (mean_len >= F.lit(3.0)) & (mean_len <= F.lit(10.0))
-            & (F.size(F.filter(
-                tokens_ws(t),
-                lambda w: F.array_contains(
-                    F.array(*[F.lit(x) for x in STOPWORDS]), w)))
-               >= F.lit(min_stopwords))
+            & (_stopword_count(toks) >= F.lit(min_stopwords))
             & (g["alpha_word_frac"] >= F.lit(0.8))
             & (g["bullet_line_frac"] <= F.lit(0.9))
             & (g["ellipsis_line_frac"] <= F.lit(0.3))
             & (g["symbol_word_ratio"] <= F.lit(0.1))
-        )
+        ))
 
-    checks = F.get(
-        F.transform(F.array(text), lambda t: checks_of(t)), 0)
+    checks = _bind(text, lambda t: _bind(tokens_ws(t), lambda toks: checks_of(t, toks)))
     return F.coalesce(checks, F.lit(False))
 
 

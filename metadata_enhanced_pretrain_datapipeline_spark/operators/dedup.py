@@ -1238,7 +1238,12 @@ def semantic_dedup(df: DataFrame, id_col: str = "vec_id",
     set is distinct ids (no vectors); the corpus comes back via one
     left-anti join. Old-vs-new incremental runs can feed the pair set
     from a persisted bucket store exactly like the minhash band store.
+    The input feeds both the pairs and the anti-join, so it is
+    materialized once, as in :func:`minhash_dedup`.
     """
+    from metadata_enhanced_pretrain_datapipeline_spark.checkpointing import materialize
+
+    df = materialize(df, eager=False)
     pairs = embedding_near_dup(df, id_col, vec_col, threshold,
                                num_planes, max_bucket_size, centroids)
     return drop_near_duplicates(df, pairs, id_col)
@@ -1256,8 +1261,13 @@ def simhash_dedup(df: DataFrame, id_col: str = "doc_id",
 
     Scale: inherits simhash_pairs' shape (one (chunk,value) exchange,
     window size guard, bounded pair expansion); the drop set is distinct
-    ids, the corpus returns through one anti-join.
+    ids, the corpus returns through one anti-join. The input feeds both
+    the pairs and the anti-join, so it is materialized once, as in
+    :func:`minhash_dedup`.
     """
+    from metadata_enhanced_pretrain_datapipeline_spark.checkpointing import materialize
+
+    df = materialize(df, eager=False)
     pairs = simhash_pairs(df, id_col, text_col, bits, max_hamming,
                           portable, max_bucket_size)
     return drop_near_duplicates(df, pairs, id_col)
@@ -1284,7 +1294,12 @@ def dedup_keep_best(df: DataFrame, pairs: DataFrame, quality_col: str,
     onto cluster MEMBERS only (ids + one scalar, never text); the
     per-cluster argmax is one window over cluster_id whose partitions
     are duplicate-cluster-sized; losers return as an ids-only anti-join.
+    The input feeds both the quality join and the anti-join, so it is
+    materialized once, as in :func:`minhash_dedup`.
     """
+    from metadata_enhanced_pretrain_datapipeline_spark.checkpointing import materialize
+
+    df = materialize(df, eager=False)
     clusters = duplicate_clusters(
         pairs, max_iterations, checkpoint_dir=checkpoint_dir
     ).withColumnRenamed("doc_id", id_col)
@@ -2644,7 +2659,10 @@ def winnow_overlap_pairs(df: DataFrame, id_col: str = "doc_id",
     metrics dilute on length-skewed pairs: a 24-word splice inside a
     long document scores tiny Jaccard but a guaranteed count.
     ``min_jaccard`` remains available as a secondary ratio gate.
-    Returns (id_a, id_b, jaccard) over fingerprint sets, id_a < id_b."""
+    Returns (id_a, id_b, jaccard) over fingerprint sets, id_a < id_b.
+
+    ``id_col`` must be unique in ``df``: a duplicated id double-counts
+    its shared fingerprints, which can push the Jaccard above 1."""
     fps = winnow_fp_sets(df, id_col, text_col, k, window, portable)
     return token_set_jaccard_pairs(
         fps.select(F.col(id_col).alias("id"), "n_tok", F.col("fp")),
@@ -2673,6 +2691,9 @@ def winnow_dedup_against(new_docs: DataFrame, seen_fps: DataFrame,
 
     Returns surviving ``new_docs`` rows (all columns intact). Documents
     too short to fingerprint can never hit the store and are KEPT.
+    ``id_col`` must be unique in ``new_docs``: rows sharing an id pool
+    their hits, so a duplicated document can reach ``min_shared`` on
+    double-counted evidence.
 
     Scale: the new month fingerprints once (per-row codegen arrays,
     deduplicated INSIDE the per-doc array — r13: the old row-level

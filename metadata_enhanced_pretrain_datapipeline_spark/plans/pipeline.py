@@ -6,11 +6,13 @@ What the composer adds beyond plain chaining:
 1. **Exclusion sinks (K3)** — the structural feature that makes the
    reference a DAG, not a tree: every filter may route rejected rows (full
    Document shape + a rejection-reason tag) to a second sink
-   (fineweb/main.py:104-140). We implement kept/removed as two filters over
-   a SHARED upstream and decide persistence: the upstream is persisted once
-   before the first dual-output filter so expensive annotators (ML scores)
-   are not recomputed per branch — the reference gets this for free by
-   teeing inside one process; Spark needs the explicit persist (SURVEY §4).
+   (fineweb/main.py:104-140). The reference tees inside one process; here
+   the kept and removed branches read one persisted upstream (SURVEY §4).
+   For a Column predicate the persisted frame also carries the
+   predicate's value as a flag column, so the predicate (often the most
+   expensive step, e.g. the Gopher rules) runs once per row and each
+   branch is a filter on the flag. Join-shaped predicates persist the
+   upstream alone and derive the removed rows from it.
 
 2. **Step ordering is preserved** — Catalyst will not reorder Python-UDF
    filters across each other, and the reference's cheap-before-expensive
@@ -94,28 +96,42 @@ class Pipeline:
         return out
 
     def run(self, df: DataFrame, sink: Callable[[DataFrame], None] | None = None) -> DataFrame:
-        """Execute with exclusion sinks. Upstreams feeding a dual output are
-        persisted (MEMORY_AND_DISK); they stay cached until the caller
-        invokes ``unpersist_all()`` — exclusion writers may defer their
-        action, and unpersisting before both branches run would silently
-        recompute the shared upstream per branch. Invariant (tested):
-        kept ∪ removed = input, disjoint."""
+        """Execute with exclusion sinks. Each step with an exclusion
+        writer persists (MEMORY_AND_DISK) the frame both branches read;
+        it stays cached until the caller invokes ``unpersist_all()`` —
+        exclusion writers may defer their action, and unpersisting before
+        both branches run would silently recompute it per branch.
+
+        A Column predicate is persisted as a flag column,
+        ``coalesce(predicate, false)``, beside the upstream's columns: the
+        predicate runs once per row, kept is ``flag`` and removed is
+        ``NOT flag`` (so NULL predicate rows are removed), and both drop
+        the flag. Because the flag is computed once, even a
+        nondeterministic predicate splits the input exactly. Invariant
+        (tested): kept ∪ removed = input, disjoint."""
         out = df
         persisted = self._persisted
-        for step in self.steps:
+        for i, step in enumerate(self.steps):
             if isinstance(step, MapStep):
                 out = step.fn(out)
                 continue
-            needs_tee = step.exclusion_writer is not None
-            if needs_tee:
+            if step.exclusion_writer is None:
+                out = (out.filter(step.predicate)
+                       if isinstance(step.predicate, Column) else step.predicate(out))
+                continue
+            if isinstance(step.predicate, Column):
+                flag = f"__keep_{i}"
+                teed = out.withColumn(flag, F.coalesce(step.predicate, F.lit(False)))
+                teed = teed.persist(StorageLevel.MEMORY_AND_DISK)
+                persisted.append(teed)
+                kept = teed.filter(F.col(flag)).drop(flag)
+                removed = teed.filter(~F.col(flag)).drop(flag)
+            else:
                 out = out.persist(StorageLevel.MEMORY_AND_DISK)
                 persisted.append(out)
-            kept = (out.filter(step.predicate)
-                    if isinstance(step.predicate, Column) else step.predicate(out))
-            if needs_tee:  # the removed branch only exists for a tee
+                kept = step.predicate(out)
                 removed = self._removed_branch(step, out, kept)
-                tagged = removed.withColumn("reason", F.lit(step.reason or step.name))
-                step.exclusion_writer(tagged)
+            step.exclusion_writer(removed.withColumn("reason", F.lit(step.reason or step.name)))
             out = kept
         if sink is not None:
             sink(out)
@@ -123,16 +139,13 @@ class Pipeline:
 
     @staticmethod
     def _removed_branch(step: FilterStep, out: DataFrame, kept: DataFrame) -> DataFrame:
-        """The rows ``step`` rejects, by the cheapest correct formulation:
-        predicate complement for Columns; the declared ``removed_fn`` for
-        join-shaped filters that have one; else ``exceptAll(kept)`` —
+        """The rows a join-shaped ``step`` rejects: the declared
+        ``removed_fn`` when it has one, else ``exceptAll(kept)`` —
         correct for ANY filter shape but a full-row set-difference shuffle.
         Map-typed columns (the Document metadata) are not allowed in set
         operations — serialize to JSON for the exceptAll and decode back
         (deterministic round-trip: both sides derive from the same
         computation)."""
-        if isinstance(step.predicate, Column):
-            return out.filter(~step.predicate | step.predicate.isNull())
         if step.removed_fn is not None:
             return step.removed_fn(out)
         map_cols = {name: t for name, t in out.dtypes if t.startswith("map<")}

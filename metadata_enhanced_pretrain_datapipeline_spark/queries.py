@@ -9334,15 +9334,14 @@ def q_gopher_quality(spark, sf):
                F.lit("\nsee more...")).otherwise(F.lit("")),
         F.when(F.col("doc_id") % 5 == 0,
                F.lit(" # #")).otherwise(F.lit("")))
-    # compute-once-then-derive (the q_script_detect r10 lesson): the
-    # signals struct and the synthesized page land in a FIRST projection
-    # as attributes; the second derives the four fractions and passes
-    # the struct into the keep via signals= — the old form re-evaluated
-    # the sig tree per field reference AND once more inside the keep
-    # (codegen does not CSE across transform() lambda trees).
-    # CollapseProject keeps the boundary: sig is non-cheap, referenced
-    # five times. repartition(32): the 6x-tokenize stage must not
-    # serialize on the O(1)-file testdata scan (session-3 lesson).
+    # compute-once-then-derive: the signals struct and the synthesized
+    # page land in a FIRST projection as attributes; the second derives
+    # the four fractions and passes the struct into the keep via
+    # signals=, so the selected struct is not computed a second time
+    # inside the keep (codegen does not CSE across transform() lambda
+    # trees). CollapseProject keeps the boundary: sig is non-cheap,
+    # referenced five times. repartition(32): the per-row Gopher stage
+    # must not serialize on the O(1)-file testdata scan.
     withs = d.repartition(32).select(
         "doc_id", t2.alias("t2"), gopher_quality_signals(t2).alias("sig"))
     sig = F.col("sig")

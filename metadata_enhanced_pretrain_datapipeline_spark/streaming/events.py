@@ -329,8 +329,9 @@ def widen_micro_batch(batch_df: DataFrame, min_parts: int | None = None) -> Data
     One round-robin exchange of the batch payload is the price; a
     micro-batch is trigger-budget-bounded by construction, so the
     shuffle is small next to the CPU it parallelizes (guide §8: move
-    the bytes once, then burn CPU wide). Already-wide batches
-    (``n files >= parallelism``) are left untouched.
+    the bytes once, then burn CPU wide). Already-wide batches (at least
+    ``min_parts`` scan partitions, default the parallelism) are left
+    untouched.
 
     Scope (r13, measured): widen JVM-CODEGEN chains only (winnowing,
     shingle+minhash — ~25-40% off the drain at sf0.1). Python-stage
@@ -340,13 +341,8 @@ def widen_micro_batch(batch_df: DataFrame, min_parts: int | None = None) -> Data
     multiplies the file count by task width. Those sinks stay unwidened
     with the reasoning inline.
     """
-    sc = batch_df.sparkSession.sparkContext
-    target = min_parts or sc.defaultParallelism
-    try:
-        n_files = len(batch_df.inputFiles())
-    except Exception:
-        n_files = 0
-    if n_files >= target:
+    target = min_parts or batch_df.sparkSession.sparkContext.defaultParallelism
+    if batch_df.rdd.getNumPartitions() >= target:
         return batch_df
     return batch_df.repartition(target)
 

@@ -26,6 +26,35 @@ def test_kept_removed_partition_input(spark, docs):
     assert all(r.reason == "too_short" for r in removed)
 
 
+def test_column_predicate_runs_once_per_row(spark, docs):
+    """The tee persists the predicate as a flag: a counting Python-UDF
+    predicate is called once per input row across both branches, the
+    branches partition the input, and NULL-predicate rows are removed."""
+    calls = spark.sparkContext.accumulator(0)
+
+    def keep(doc_id):
+        calls.add(1)
+        return None if doc_id % 7 == 0 else doc_id % 2 == 0
+
+    removed_batches = []
+    pipe = Pipeline(steps=[FilterStep(
+        "even", F.udf(keep, "boolean")(F.col("doc_id")),
+        exclusion_writer=lambda df: removed_batches.append(df.collect()), reason="odd")])
+    kept = pipe.run(docs).collect()
+    pipe.unpersist_all()
+    n = docs.count()
+    assert calls.value == n
+    kept_ids = {r.doc_id for r in kept}
+    removed = removed_batches[0]
+    removed_ids = {r.doc_id for r in removed}
+    assert kept_ids.isdisjoint(removed_ids) and len(kept) + len(removed) == n
+    assert kept_ids | removed_ids == set(range(n))
+    assert kept_ids == {i for i in range(n) if i % 2 == 0 and i % 7 != 0}
+    assert {i for i in range(n) if i % 7 == 0} <= removed_ids
+    assert list(removed[0].asDict()) == docs.columns + ["reason"]
+    assert list(kept[0].asDict()) == docs.columns
+
+
 def test_map_then_filter_composition(spark, docs):
     pipe = Pipeline(
         steps=[

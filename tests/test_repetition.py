@@ -119,3 +119,100 @@ def test_gopher_quality_keep_thresholds(spark):
     assert rows[1] is True
     assert rows[2] is False
     assert rows[3] is False  # empty doc: NULL signals -> dropped
+
+
+def _gopher_fixture(spark):
+    """Pages that sit on each Gopher threshold (and one step past it),
+    plus empty, whitespace-only and NULL text. With min_words=5 and
+    max_words=50 each ``*_edge`` row is kept and each ``*_over`` row is
+    dropped by exactly that rule."""
+    lines = ["the cat and dog"] * 10
+    rows = {
+        "words_min_edge": "the cat and the dog",         # 5 words, mean 3.0
+        "words_min_over": "the cat and dog",
+        "words_max_edge": " ".join(["the cat and dog sat"] * 10),
+        "words_max_over": " ".join(["the cat and dog sat"] * 10) + " now",
+        "mean_10_edge": "the and abcdefghijklmno abcdefghijklmno abcdefghijklmn",
+        "mean_10_over": "the and abcdefghijklmno abcdefghijklmno abcdefghijklmno",
+        "mean_3_over": "the a of to and",                # mean 2.2
+        "stop_2_edge": "the cat sat and sleeps",
+        "stop_2_over": "the cat sat with dogs",
+        "alpha_08_edge": "the cats and dogs sat upon the mats 42 17",
+        "alpha_08_over": "the cats and dogs sat upon the 99 42 17",
+        "bullet_09_edge": "\n".join(["•cat and dog"] * 9 + ["cat and dog"]),
+        "bullet_09_over": "\n".join(["•cat and dog"] * 10),
+        "ellipsis_03_edge": "\n".join([l + "..." for l in lines[:3]] + lines[3:]),
+        "ellipsis_03_over": "\n".join([l + "…" for l in lines[:4]] + lines[4:]),
+        "symbol_01_edge": " ".join(["#tag"] * 2 + ["the cat and dog sat on mat"] * 2
+                                   + ["the cat and dog"]),  # 2 / 20
+        "symbol_01_over": " ".join(["#tag"] * 3 + ["the cat and dog sat on mat"] * 2
+                                   + ["the cat and dog"]),  # 3 / 21
+        "empty": "",
+        "blank": "  \n \t ",
+        "null": None,
+    }
+    return spark.createDataFrame(list(rows.items()), "id string, text string")
+
+
+def _reference_keep(text, min_words=50, max_words=100_000, min_stopwords=2):
+    """The Gopher keep restated from the public signal functions."""
+    from metadata_enhanced_pretrain_datapipeline_spark.functions.text import (
+        gopher_quality_signals,
+        quality_stats,
+    )
+    from pyspark.sql import functions as F
+
+    qs, g = quality_stats(text), gopher_quality_signals(text)
+    n = qs["n_tokens"]
+    mean = F.round(qs["avg_token_len"], 6)
+    n_stop = F.round(qs["stopword_ratio"] * n)
+    return F.coalesce(
+        (n >= min_words) & (n <= max_words) & (mean >= 3.0) & (mean <= 10.0)
+        & (n_stop >= min_stopwords)
+        & (g["alpha_word_frac"] >= 0.8) & (g["bullet_line_frac"] <= 0.9)
+        & (g["ellipsis_line_frac"] <= 0.3) & (g["symbol_word_ratio"] <= 0.1),
+        F.lit(False))
+
+
+def test_gopher_quality_keep_matches_reference_on_thresholds(spark):
+    from metadata_enhanced_pretrain_datapipeline_spark.functions.text import (
+        gopher_quality_keep,
+        gopher_quality_signals,
+    )
+    from pyspark.sql import functions as F
+
+    df = _gopher_fixture(spark)
+    text = F.col("text")
+    tight = {"min_words": 5, "max_words": 50}
+    with_sig = df.select("id", "text", gopher_quality_signals(text).alias("sig"))
+    rows = with_sig.select(
+        "id",
+        gopher_quality_keep(text).alias("default"),
+        _reference_keep(text).alias("ref_default"),
+        gopher_quality_keep(text, **tight).alias("tight"),
+        gopher_quality_keep(text, signals=F.col("sig"), **tight).alias("tight_sig"),
+        _reference_keep(text, **tight).alias("ref_tight"),
+    ).collect()
+    for r in rows:
+        assert r.default is r.ref_default, r
+        assert r.tight is r.tight_sig is r.ref_tight, r
+    tight_kept = {r.id: r.tight for r in rows}
+    # the fixture is on the edges it claims: every edge row is kept and
+    # every over row dropped, so each threshold's comparison is exercised
+    for name, kept in tight_kept.items():
+        assert kept is name.endswith("_edge"), (name, kept)
+    # default bounds: only the 50- and 51-word pages reach min_words=50
+    assert {r.id for r in rows if r.default} == {"words_max_edge", "words_max_over"}
+
+
+def test_gopher_quality_keep_splits_the_page_twice(spark):
+    """One token split and one line split in the analyzed plan: the text,
+    tokens and signals are bound once, not re-derived per rule."""
+    from metadata_enhanced_pretrain_datapipeline_spark.functions.text import (
+        gopher_quality_keep,
+    )
+    from pyspark.sql import functions as F
+
+    df = spark.createDataFrame([("a b",)], "text string")
+    plan = df.select(gopher_quality_keep(F.col("text")).alias("k"))._jdf.queryExecution()
+    assert plan.analyzed().toString().count("split(") == 2
