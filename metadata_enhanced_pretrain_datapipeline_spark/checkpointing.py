@@ -45,6 +45,24 @@ from pyspark.sql import DataFrame
 CHECKPOINT_DIR_ENV = "MEP_SPARK_CHECKPOINT_DIR"
 
 
+_SCAN_CLASSES = (
+    "org.apache.spark.sql.execution.datasources.LogicalRelation",
+    "org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation",
+)
+
+
+def _is_bare_scan(df: DataFrame) -> bool:
+    """True when ``df``'s analyzed plan is a source relation, looking
+    through the ``SubqueryAlias`` a catalog table read wraps it in."""
+    jvm = df.sparkSession._jvm
+    plan = df._jdf.queryExecution().analyzed()
+    alias = jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias")
+    while alias.isInstance(plan):
+        plan = plan.child()
+    return any(jvm.java.lang.Class.forName(c).isInstance(plan) for c in _SCAN_CLASSES)
+
+
 def materialize(df: DataFrame, checkpoint_dir: str | None = None,
                 eager: bool = True) -> DataFrame:
     """Truncate ``df``'s lineage: reliable ``.checkpoint()`` when a
@@ -70,13 +88,12 @@ def materialize(df: DataFrame, checkpoint_dir: str | None = None,
     Callers that need true lineage truncation (iterative plan growth)
     use ``eager=True``, which keeps localCheckpoint locally.
 
-    ``eager=False`` returns a bare file scan unchanged: re-reading the
-    files costs no more than reading a cache, and a cached scan would
-    stand in for every later read of the same files in the session,
-    which then lose their column pruning.
+    ``eager=False`` returns a bare scan (a file read or a catalog table,
+    V1 or V2 source) unchanged: a cached scan would stand in for every
+    later read of the same source in the session, which then lose their
+    column pruning.
     """
-    scan = df._jdf.queryExecution().analyzed().getClass().getSimpleName() == "LogicalRelation"
-    if scan and not eager:
+    if not eager and _is_bare_scan(df):
         return df
     target = checkpoint_dir or os.environ.get(CHECKPOINT_DIR_ENV)
     if target:

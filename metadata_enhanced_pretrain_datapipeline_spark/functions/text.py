@@ -466,7 +466,7 @@ def script_fractions(text: Column) -> Column:
             for name, java_re, _ in SCRIPT_CLASSES
         ])
 
-    return F.get(F.transform(F.array(text), lambda t: sig_of(t)), 0)
+    return _bind(text, sig_of)
 
 
 def dominant_script_from(fractions: Column) -> Column:
@@ -493,7 +493,7 @@ def dominant_script_from(fractions: Column) -> Column:
                 .when(ar >= 0.5, F.lit("arabic"))
                 .otherwise(F.lit("other")))
 
-    return F.get(F.transform(F.array(fractions), lambda s: pick(s)), 0)
+    return _bind(fractions, pick)
 
 
 def dominant_script(text: Column) -> Column:

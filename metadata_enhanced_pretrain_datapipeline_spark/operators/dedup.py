@@ -1238,12 +1238,7 @@ def semantic_dedup(df: DataFrame, id_col: str = "vec_id",
     set is distinct ids (no vectors); the corpus comes back via one
     left-anti join. Old-vs-new incremental runs can feed the pair set
     from a persisted bucket store exactly like the minhash band store.
-    The input feeds both the pairs and the anti-join, so it is
-    materialized once, as in :func:`minhash_dedup`.
     """
-    from metadata_enhanced_pretrain_datapipeline_spark.checkpointing import materialize
-
-    df = materialize(df, eager=False)
     pairs = embedding_near_dup(df, id_col, vec_col, threshold,
                                num_planes, max_bucket_size, centroids)
     return drop_near_duplicates(df, pairs, id_col)
@@ -1261,13 +1256,8 @@ def simhash_dedup(df: DataFrame, id_col: str = "doc_id",
 
     Scale: inherits simhash_pairs' shape (one (chunk,value) exchange,
     window size guard, bounded pair expansion); the drop set is distinct
-    ids, the corpus returns through one anti-join. The input feeds both
-    the pairs and the anti-join, so it is materialized once, as in
-    :func:`minhash_dedup`.
+    ids, the corpus returns through one anti-join.
     """
-    from metadata_enhanced_pretrain_datapipeline_spark.checkpointing import materialize
-
-    df = materialize(df, eager=False)
     pairs = simhash_pairs(df, id_col, text_col, bits, max_hamming,
                           portable, max_bucket_size)
     return drop_near_duplicates(df, pairs, id_col)
@@ -1294,12 +1284,7 @@ def dedup_keep_best(df: DataFrame, pairs: DataFrame, quality_col: str,
     onto cluster MEMBERS only (ids + one scalar, never text); the
     per-cluster argmax is one window over cluster_id whose partitions
     are duplicate-cluster-sized; losers return as an ids-only anti-join.
-    The input feeds both the quality join and the anti-join, so it is
-    materialized once, as in :func:`minhash_dedup`.
     """
-    from metadata_enhanced_pretrain_datapipeline_spark.checkpointing import materialize
-
-    df = materialize(df, eager=False)
     clusters = duplicate_clusters(
         pairs, max_iterations, checkpoint_dir=checkpoint_dir
     ).withColumnRenamed("doc_id", id_col)

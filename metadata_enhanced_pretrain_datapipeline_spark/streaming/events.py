@@ -329,9 +329,10 @@ def widen_micro_batch(batch_df: DataFrame, min_parts: int | None = None) -> Data
     One round-robin exchange of the batch payload is the price; a
     micro-batch is trigger-budget-bounded by construction, so the
     shuffle is small next to the CPU it parallelizes (guide §8: move
-    the bytes once, then burn CPU wide). Already-wide batches (at least
-    ``min_parts`` scan partitions, default the parallelism) are left
-    untouched.
+    the bytes once, then burn CPU wide). Every batch is widened: its
+    scan partition count measures bytes, not rows (a one-row-group file
+    split into byte ranges reports several partitions, one holding all
+    the rows), so it cannot tell a wide batch from a serial one.
 
     Scope (r13, measured): widen JVM-CODEGEN chains only (winnowing,
     shingle+minhash — ~25-40% off the drain at sf0.1). Python-stage
@@ -341,10 +342,8 @@ def widen_micro_batch(batch_df: DataFrame, min_parts: int | None = None) -> Data
     multiplies the file count by task width. Those sinks stay unwidened
     with the reasoning inline.
     """
-    target = min_parts or batch_df.sparkSession.sparkContext.defaultParallelism
-    if batch_df.rdd.getNumPartitions() >= target:
-        return batch_df
-    return batch_df.repartition(target)
+    return batch_df.repartition(
+        min_parts or batch_df.sparkSession.sparkContext.defaultParallelism)
 
 
 def stream_append_ivf_quantized_store(stream_df: DataFrame, path: str,

@@ -635,9 +635,10 @@ def test_materialize_env_var_switch(spark, tmp_path, monkeypatch):
 
 
 def test_materialize_lazy_leaves_file_scans_uncached(spark, tmp_path):
-    """A lazy materialize of a bare file scan caches nothing: a cached scan
-    would stand in for every later read of the files and undo their
-    column pruning. A derived frame is still persisted."""
+    """A lazy materialize of a bare scan (file read, catalog table, V2
+    source) caches nothing: a cached scan would stand in for every later
+    read of the source and undo its column pruning. A derived frame is
+    still persisted."""
     from metadata_enhanced_pretrain_datapipeline_spark.checkpointing import materialize
 
     path = str(tmp_path / "docs")
@@ -646,6 +647,19 @@ def test_materialize_lazy_leaves_file_scans_uncached(spark, tmp_path):
     assert not scan.is_cached
     plan = spark.read.parquet(path).select("doc_id")._jdf.queryExecution().executedPlan()
     assert "struct<doc_id:bigint>" in plan.toString()
+    spark.read.parquet(path).write.saveAsTable("lazy_scan_docs")
+    try:
+        assert not materialize(spark.table("lazy_scan_docs"), eager=False).is_cached
+    finally:
+        spark.sql("DROP TABLE lazy_scan_docs")
+    prev = spark.conf.get("spark.sql.sources.useV1SourceList")
+    spark.conf.set("spark.sql.sources.useV1SourceList", "")
+    try:
+        v2 = spark.read.parquet(path)
+        assert "RelationV2" in v2._jdf.queryExecution().analyzed().toString()
+        assert not materialize(v2, eager=False).is_cached
+    finally:
+        spark.conf.set("spark.sql.sources.useV1SourceList", prev)
     derived = materialize(scan.filter("doc_id > 3"), eager=False)
     assert derived.is_cached and derived.count() == 6
     derived.unpersist()
@@ -1113,21 +1127,6 @@ def test_minhash_dedup_plans_its_input_once(spark, docs):
     assert sorted(r.doc_id for r in kept.collect()) == sorted(
         r.doc_id for r in dedup.drop_near_duplicates(
             exact, dedup.minhash_lsh_pairs(exact, num_hashes=8, bands=4)).collect())
-
-
-def test_simhash_dedup_plans_its_input_once(spark, docs):
-    """simhash_dedup reads one materialized input: the exact-dedup window
-    exchange is planned once, not under both the pairs and the anti-join.
-    The projection keeps the input's plan apart from the one the minhash
-    test caches: a materialized cache shows query stages, not exchanges."""
-    exact = dedup.dedup_exact_text(docs.select("doc_id", "text"))
-    kept = dedup.simhash_dedup(exact)
-    exchanges = [n.simpleString(100) for n in _physical_nodes(spark, kept)
-                 if n.nodeName() == "Exchange"]
-    assert sum("hashpartitioning(__k" in e for e in exchanges) == 1, exchanges
-    assert sorted(r.doc_id for r in kept.collect()) == sorted(
-        r.doc_id for r in dedup.drop_near_duplicates(
-            exact, dedup.simhash_pairs(exact)).collect())
 
 
 def test_duplicate_clusters_decimal_ids_near_1e37(spark):
