@@ -9,12 +9,49 @@ Scale notes (100 TB target):
   picks the effective count from `advisoryPartitionSizeInBytes`.
 - Session timezone pinned to UTC so timestamp semantics are deterministic
   and match the DuckDB oracle (naive timestamps).
+
+Launch cost (one-shot jobs, e.g. one Slurm array task per input shard):
+half of a driver JVM's ~10 s start is loading and verifying Spark's
+classes from ``$SPARK_HOME/jars``. ``get_spark`` therefore starts the JVM
+with a dynamic AppCDS archive (JDK class data sharing): the JVM maps the
+classes an earlier launch loaded, already parsed, from one file.
+
+- What and where: one archive per JDK, Spark jar set and classpath, at
+  ``${XDG_CACHE_HOME:-~/.cache}/metadata_enhanced_pretrain_datapipeline_spark/cds/<key>.jsa``,
+  140-180 MB each, beside the empty ``conf/`` directory the launch puts
+  on the classpath in place of the Spark conf directory (CDS refuses a
+  non-empty directory there). The checkout holds none of it.
+- First launch for a key: the JVM records its classes
+  (``-XX:ArchiveClassesAtExit``), which makes that launch 1.3-1.5x
+  slower, and writes ``<key>.<token>.part`` when it exits (~12 s;
+  interpreter exit waits for it). The next ``get_spark`` renames the part
+  to ``<key>.jsa`` only after ``java -Xshare:on`` maps it with the
+  classpath and options of the launch that wrote it; a part that fails
+  that check is deleted once it is 10 minutes old.
+- Skipped, the launch then being exactly as without it, when a JVM already
+  exists (an active context, a gateway, ``PYSPARK_GATEWAY_PORT``); when the
+  caller sets ``spark.driver.defaultJavaOptions`` (the CDS flag rides
+  there, ahead of the caller's ``--driver-java-options``), an ``-Xshare``
+  or archive flag, or extra classpath; when the Spark conf directory holds
+  anything but ``*.template`` files (a live ``spark-defaults.conf`` or
+  ``log4j2.properties`` keeps working); or when the cache is not writable.
+- A stale archive (JDK or jars changed in place) is refused by the JVM,
+  which then starts normally (``-Xshare:auto``).
+- Clear the cache by deleting the ``cds`` directory.
 """
 
 from __future__ import annotations
 
+import atexit
+import contextlib
+import hashlib
+import json
 import os
+import shutil
+import subprocess
+import time
 
+from py4j.protocol import Py4JError
 from pyspark.sql import SparkSession
 
 _ORACLE_CONFS = {
@@ -69,6 +106,154 @@ def tune_for_oracle(spark: SparkSession) -> SparkSession:
     return spark
 
 
+#: the archives' directory under the user cache
+_CDS_DIR = os.path.join("metadata_enhanced_pretrain_datapipeline_spark", "cds")
+#: a part that still fails its check this long after its last write lost
+#: its writer
+_CDS_STALE_S = 600
+#: environment a launch reads Java options from, and the marks of a caller
+#: that sets the JVM's class data sharing, the defaultJavaOptions the CDS
+#: flag rides in, or extra classpath
+_CDS_OPTION_ENVS = ("PYSPARK_SUBMIT_ARGS", "SPARK_SUBMIT_OPTS",
+                    "JAVA_TOOL_OPTIONS", "JDK_JAVA_OPTIONS", "_JAVA_OPTIONS")
+_CDS_CALLER_MARKS = ("defaultJavaOptions", "-Xshare", "SharedArchiveFile",
+                     "ArchiveClassesAtExit", "extraClassPath",
+                     "--driver-class-path")
+#: directories and jars the launcher appends to the classpath; a conf
+#: directory there is non-empty, which CDS refuses
+_CDS_CLASSPATH_ENVS = ("HADOOP_CONF_DIR", "YARN_CONF_DIR",
+                       "SPARK_DIST_CLASSPATH")
+#: a dump otherwise warns once per class of a signed jar (janino's)
+_CDS_QUIET = "-Xlog:cds*=off"
+
+
+def _java() -> str | None:
+    """The java binary spark-class runs: $JAVA_HOME's, else PATH's."""
+    home = os.environ.get("JAVA_HOME")
+    java = os.path.join(home, "bin", "java") if home else shutil.which("java")
+    return os.path.realpath(java) if java and os.access(java, os.X_OK) else None
+
+
+def _cds_key(java: str, jars: str, classpath_dir: str) -> str:
+    """Archive name for this JDK (binary and ``release`` file), this Spark
+    jar set (name, size, mtime) and this directory on the classpath."""
+    h = hashlib.sha256(f"{java}\0{jars}\0{classpath_dir}".encode())
+    with contextlib.suppress(OSError):
+        with open(os.path.join(os.path.dirname(os.path.dirname(java)),
+                               "release"), "rb") as f:
+            h.update(f.read())
+    for e in sorted(os.scandir(jars), key=lambda e: e.name):
+        st = e.stat()
+        h.update(f"\0{e.name}\0{st.st_size}\0{st.st_mtime_ns}".encode())
+    return h.hexdigest()[:20]
+
+
+def _cds_maps(java: str, part: str, args: str) -> bool:
+    """Whether ``java -Xshare:on`` maps ``part`` under the classpath and
+    options its writer recorded in ``args``. A truncated archive fails,
+    often by crashing the JVM (SIGBUS), whose crash log goes nowhere."""
+    if not os.path.isfile(part):
+        return False
+    try:
+        with open(args) as f:
+            argv = json.load(f)
+        return subprocess.run(
+            [java, "-Xshare:on", f"-XX:SharedArchiveFile={part}",
+             f"-XX:ErrorFile={os.devnull}", *argv, "-version"],
+            stdin=subprocess.DEVNULL, stdout=subprocess.DEVNULL,
+            stderr=subprocess.DEVNULL, timeout=120).returncode == 0
+    except (OSError, ValueError, subprocess.SubprocessError):
+        return False
+
+
+def _cds_promote(cache: str, key: str, java: str) -> None:
+    """Rename the first finished dump of ``key`` that the JVM maps to
+    ``<key>.jsa``; delete parts that fail long after their last write."""
+    archive = os.path.join(cache, key + ".jsa")
+    tokens = {n.split(".")[1] for n in os.listdir(cache)
+              if n.startswith(key + ".") and n.endswith(".part")}
+    for token in sorted(tokens):
+        stem = os.path.join(cache, f"{key}.{token}")
+        try:
+            if not os.path.exists(archive) and _cds_maps(
+                    java, stem + ".part", stem + ".args"):
+                os.replace(stem + ".part", archive)
+                os.remove(stem + ".args")
+            elif time.time() - os.path.getmtime(stem + ".part") > _CDS_STALE_S:
+                for p in (stem + ".part", stem + ".args"):
+                    with contextlib.suppress(FileNotFoundError):
+                        os.remove(p)
+        except OSError:
+            continue  # a concurrent launch promoted or removed it
+
+
+def _cds_launch() -> tuple[str, str, str | None] | None:
+    """(java options, conf directory, dump stem) for a driver JVM this
+    call starts, the stem set when the launch writes the archive; None to
+    launch exactly as without class data sharing."""
+    from pyspark import SparkContext
+    from pyspark.find_spark_home import _find_spark_home
+
+    if (SparkContext._active_spark_context is not None
+            or SparkContext._gateway is not None
+            or "PYSPARK_GATEWAY_PORT" in os.environ):
+        return None
+    if any(m in os.environ.get(v, "")
+           for v in _CDS_OPTION_ENVS for m in _CDS_CALLER_MARKS):
+        return None
+    if any(os.environ.get(v) for v in _CDS_CLASSPATH_ENVS):
+        return None
+    spark_home = _find_spark_home()
+    conf = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+    if os.path.isdir(conf) and not all(
+            n.endswith(".template") for n in os.listdir(conf)):
+        return None
+    java = _java()
+    base = os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache")
+    cache = os.path.join(base, _CDS_DIR)
+    # spark-submit splits the options on whitespace and quotes
+    if java is None or any(c.isspace() or c in "\"'\\" for c in cache):
+        return None
+    empty = os.path.join(cache, "conf")
+    os.makedirs(empty, exist_ok=True)
+    if os.listdir(empty):
+        return None
+    key = _cds_key(java, os.path.join(spark_home, "jars"), empty)
+    _cds_promote(cache, key, java)
+    archive = os.path.join(cache, key + ".jsa")
+    if os.path.exists(archive):
+        return f"-XX:SharedArchiveFile={archive} {_CDS_QUIET}", empty, None
+    stem = os.path.join(cache, f"{key}.{os.urandom(6).hex()}")
+    return f"-XX:ArchiveClassesAtExit={stem}.part {_CDS_QUIET}", empty, stem
+
+
+def _await_dump(proc: subprocess.Popen) -> None:
+    """End the gateway JVM (it exits on stdin EOF) and wait while it
+    writes its archive, so the part is whole when this process is gone."""
+    if proc.poll() is None:
+        proc.stdin.close()
+        with contextlib.suppress(subprocess.TimeoutExpired):
+            proc.wait(120)
+
+
+def _record_dump(spark: SparkSession, stem: str, opts: str) -> None:
+    """Save the dumping JVM's classpath and options for the check that
+    promotes its part, and hold interpreter exit until the part is
+    written."""
+    from pyspark import SparkContext
+
+    mx = spark.sparkContext._jvm.java.lang.management.ManagementFactory \
+        .getRuntimeMXBean()
+    ours = set(opts.split())
+    argv = ["-cp", mx.getClassPath()] + [
+        a for a in mx.getInputArguments() if a not in ours]
+    with open(stem + ".args", "w") as f:
+        json.dump(argv, f)
+    proc = getattr(SparkContext._gateway, "proc", None)
+    if proc is not None:
+        atexit.register(_await_dump, proc)
+
+
 def get_spark(app_name: str = "metadata-enhanced-pretrain-datapipeline-spark",
               cpus: int | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
@@ -115,4 +300,26 @@ def get_spark(app_name: str = "metadata-enhanced-pretrain-datapipeline-spark",
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
     )
-    return builder.getOrCreate()
+    try:
+        cds = _cds_launch()
+    except OSError:
+        cds = None
+    if cds is None:
+        return builder.getOrCreate()
+    opts, conf_dir, dump = cds
+    saved = os.environ.get("SPARK_CONF_DIR")
+    os.environ["SPARK_CONF_DIR"] = conf_dir  # read once, at the launch
+    try:
+        spark = builder.config("spark.driver.defaultJavaOptions", opts) \
+            .getOrCreate()
+    finally:
+        if saved is None:
+            del os.environ["SPARK_CONF_DIR"]
+        else:
+            os.environ["SPARK_CONF_DIR"] = saved
+    if dump:
+        try:
+            _record_dump(spark, dump, opts)
+        except (OSError, Py4JError):
+            pass  # the part then never promotes; the session is fine
+    return spark
