@@ -14,7 +14,11 @@ Arrow-batched pandas UDFs only for genuinely imperative semantics
 (model inference, stateful packing, running-length segmentation).
 """
 
+from metadata_enhanced_pretrain_datapipeline_spark import zipcache
 from metadata_enhanced_pretrain_datapipeline_spark.session import get_spark, tune_for_oracle
+
+# runs in every Python worker that unpickles a package function
+zipcache.install()
 
 __all__ = ["get_spark", "tune_for_oracle"]
 

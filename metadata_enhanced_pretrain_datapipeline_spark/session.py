@@ -16,7 +16,8 @@ classes from ``$SPARK_HOME/jars``. ``get_spark`` therefore starts the JVM
 with a dynamic AppCDS archive (JDK class data sharing): the JVM maps the
 classes an earlier launch loaded, already parsed, from one file.
 
-- What and where: one archive per JDK, Spark jar set and classpath, at
+- What and where: one archive per JDK, Spark jar set, classpath and cache
+  layout, at
   ``${XDG_CACHE_HOME:-~/.cache}/metadata_enhanced_pretrain_datapipeline_spark/cds/<key>.jsa``,
   140-180 MB each, beside the empty ``conf/`` directory the launch puts
   on the classpath in place of the Spark conf directory (CDS refuses a
@@ -26,8 +27,12 @@ classes an earlier launch loaded, already parsed, from one file.
   slower, and writes ``<key>.<token>.part`` when it exits (~12 s;
   interpreter exit waits for it). The next ``get_spark`` renames the part
   to ``<key>.jsa`` only after ``java -Xshare:on`` maps it with the
-  classpath and options of the launch that wrote it; a part that fails
-  that check is deleted once it is 10 minutes old.
+  classpath and options of the launch that wrote it, and records the
+  archive's size in ``<key>.jsa.size``; a part that fails that check is
+  deleted once it is 10 minutes old.
+- Each launch compares the archive with that record first. An archive of
+  another size (cut short after promotion: the JVM crashes on it rather
+  than falling back), or one with no record, is deleted and dumped anew.
 - Skipped, the launch then being exactly as without it, when a JVM already
   exists (an active context, a gateway, ``PYSPARK_GATEWAY_PORT``); when the
   caller sets ``spark.driver.defaultJavaOptions`` (the CDS flag rides
@@ -111,6 +116,10 @@ _CDS_DIR = os.path.join("metadata_enhanced_pretrain_datapipeline_spark", "cds")
 #: a part that still fails its check this long after its last write lost
 #: its writer
 _CDS_STALE_S = 600
+#: cache layout, part of the key: an archive promoted by a version that
+#: wrote no size record keeps its own key, so two versions sharing the
+#: cache do not delete each other's archive on every launch
+_CDS_LAYOUT = "sized-1"
 #: environment a launch reads Java options from, and the marks of a caller
 #: that sets the JVM's class data sharing, the defaultJavaOptions the CDS
 #: flag rides in, or extra classpath
@@ -136,8 +145,10 @@ def _java() -> str | None:
 
 def _cds_key(java: str, jars: str, classpath_dir: str) -> str:
     """Archive name for this JDK (binary and ``release`` file), this Spark
-    jar set (name, size, mtime) and this directory on the classpath."""
-    h = hashlib.sha256(f"{java}\0{jars}\0{classpath_dir}".encode())
+    jar set (name, size, mtime), this directory on the classpath and this
+    cache layout."""
+    h = hashlib.sha256(
+        f"{_CDS_LAYOUT}\0{java}\0{jars}\0{classpath_dir}".encode())
     with contextlib.suppress(OSError):
         with open(os.path.join(os.path.dirname(os.path.dirname(java)),
                                "release"), "rb") as f:
@@ -168,7 +179,8 @@ def _cds_maps(java: str, part: str, args: str) -> bool:
 
 def _cds_promote(cache: str, key: str, java: str) -> None:
     """Rename the first finished dump of ``key`` that the JVM maps to
-    ``<key>.jsa``; delete parts that fail long after their last write."""
+    ``<key>.jsa``, after recording its size in ``<key>.jsa.size``; delete
+    parts that fail long after their last write."""
     archive = os.path.join(cache, key + ".jsa")
     tokens = {n.split(".")[1] for n in os.listdir(cache)
               if n.startswith(key + ".") and n.endswith(".part")}
@@ -177,6 +189,8 @@ def _cds_promote(cache: str, key: str, java: str) -> None:
         try:
             if not os.path.exists(archive) and _cds_maps(
                     java, stem + ".part", stem + ".args"):
+                with open(archive + ".size", "w") as f:
+                    f.write(str(os.path.getsize(stem + ".part")))
                 os.replace(stem + ".part", archive)
                 os.remove(stem + ".args")
             elif time.time() - os.path.getmtime(stem + ".part") > _CDS_STALE_S:
@@ -185,6 +199,17 @@ def _cds_promote(cache: str, key: str, java: str) -> None:
                         os.remove(p)
         except OSError:
             continue  # a concurrent launch promoted or removed it
+
+
+def _cds_sealed(archive: str) -> bool:
+    """Whether ``archive`` has the size recorded when it was promoted. A
+    mapped archive cut short after that crashes the JVM (SIGBUS) instead
+    of falling back to a normal start."""
+    try:
+        with open(archive + ".size") as f:
+            return int(f.read()) == os.path.getsize(archive)
+    except (OSError, ValueError):
+        return False
 
 
 def _cds_launch() -> tuple[str, str, str | None] | None:
@@ -222,7 +247,11 @@ def _cds_launch() -> tuple[str, str, str | None] | None:
     _cds_promote(cache, key, java)
     archive = os.path.join(cache, key + ".jsa")
     if os.path.exists(archive):
-        return f"-XX:SharedArchiveFile={archive} {_CDS_QUIET}", empty, None
+        if _cds_sealed(archive):
+            return f"-XX:SharedArchiveFile={archive} {_CDS_QUIET}", empty, None
+        for p in (archive, archive + ".size"):
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(p)
     stem = os.path.join(cache, f"{key}.{os.urandom(6).hex()}")
     return f"-XX:ArchiveClassesAtExit={stem}.part {_CDS_QUIET}", empty, stem
 

@@ -111,9 +111,11 @@ def test_cds_flag_rides_in_default_options_beside_caller_options(tmp_path):
     assert os.listdir(cache / "conf") == []
     assert seen["conf_dir_after"] is None
 
-    # with the archive in place the launch maps it instead of dumping
+    # with the archive and its size record in place the launch maps it
+    # instead of dumping
     key = os.path.basename(flag).split(".")[0]
     (cache / f"{key}.jsa").write_bytes(b"")
+    (cache / f"{key}.jsa.size").write_text("0")
     (opts,) = _java_opts(_run(_CAPTURE, env)["cmd"])
     assert opts.split()[0] == f"-XX:SharedArchiveFile={cache}/{key}.jsa"
 
@@ -192,8 +194,45 @@ def test_truncated_part_is_never_promoted(tmp_path):
     dump("whole", whole)
     session._cds_promote(str(cache), key, str(java))
     assert (cache / f"{key}.jsa").stat().st_size == whole
+    assert (cache / f"{key}.jsa.size").read_text() == str(whole)
     assert sorted(os.listdir(cache)) == [
-        "k.jsa", "k.young.args", "k.young.part"]
+        "k.jsa", "k.jsa.size", "k.young.args", "k.young.part"]
+
+
+@pytest.mark.parametrize("record", ["whole", "missing"])
+def test_archive_that_lost_its_size_is_dropped_and_dumped_anew(
+        tmp_path, monkeypatch, record):
+    # no JVM: _cds_launch only plans this process's launch
+    from pyspark import SparkContext
+
+    env = _env(tmp_path)
+    for k in session._CDS_OPTION_ENVS + session._CDS_CLASSPATH_ENVS + (
+            "PYSPARK_GATEWAY_PORT",):
+        monkeypatch.delenv(k, raising=False)
+    for k in ("XDG_CACHE_HOME", "SPARK_CONF_DIR"):
+        monkeypatch.setenv(k, env[k])
+    monkeypatch.setattr(SparkContext, "_active_spark_context", None)
+    monkeypatch.setattr(SparkContext, "_gateway", None)
+    cache = tmp_path / "cache" / session._CDS_DIR
+
+    opts, _, stem = session._cds_launch()
+    assert opts.startswith(f"-XX:ArchiveClassesAtExit={stem}.part")
+    key = os.path.basename(stem).split(".")[0]
+    archive = cache / f"{key}.jsa"
+    archive.write_bytes(b"\1" * 4096)
+    (cache / f"{key}.jsa.size").write_text("4096")
+    opts, _, stem = session._cds_launch()
+    assert opts.split()[0] == f"-XX:SharedArchiveFile={archive}" and stem is None
+
+    # cut to half its length after promotion, or promoted with no record
+    if record == "whole":
+        archive.write_bytes(b"\1" * 2048)
+    else:
+        (cache / f"{key}.jsa.size").unlink()
+    opts, _, stem = session._cds_launch()
+    assert opts.startswith(f"-XX:ArchiveClassesAtExit={cache}/{key}.")
+    assert stem is not None
+    assert not archive.exists() and not (cache / f"{key}.jsa.size").exists()
 
 
 @pytest.fixture
