@@ -272,10 +272,8 @@ def control_factor(timings: dict[str, float], sf: float) -> float | None:
 
 def timed_laps(run) -> list[float]:
     """THE measurement protocol: one warm lap (JIT + IO cache), then two
-    timed laps. Shared by bench.py, scripts/abba_lap.py and
-    scripts/store_economics.py so the A/B adjudication and economics
-    numbers can never desynchronize from the benchmark they mirror.
-    Callers take min(laps) for best-of-2."""
+    timed laps. The A/B adjudications and store economics recorded in
+    SCALE.md were timed with it. Callers take min(laps) for best-of-2."""
     run()
     laps = []
     for _ in range(2):

@@ -6610,8 +6610,8 @@ def q_quantized_store_probe(spark, sf):
     (quantize_embeddings + lsh_bucket → partitionBy(bucket)), so the
     probe composes BOTH scale levers — the bucket equality arrives as a
     PartitionFilter (asserted in-plan: one bucket's files are read) and
-    the scan reads tinyint codes (~3.7x fewer bytes, measured in
-    scripts/quantized_store_ab.py) scored via the exact-integer
+    the scan reads tinyint codes (~3.7x fewer bytes, measured by a
+    one-off A/B recorded in SCALE.md) scored via the exact-integer
     prequantized path. The oracle recomputes bucket assignment and
     quantization logically — the physical layout must not change a
     value."""
@@ -6704,8 +6704,7 @@ def q_ivf_quantized_probe(spark, sf):
     embeddings this probe touches (nprobe/nlists) x ~0.27 of the bytes.
     The oracle replays list assignment, quantization and the
     exact-integer scoring logically — the physical layout must not
-    change a value. A/B vs float brute force: scripts/ivfq_store_ab.py
-    (SCALE.md)."""
+    change a value. A/B vs float brute force: SCALE.md round 8."""
     e = load(spark, sf, "embeddings")
     cents = _static_codebook(e)
     path = _scratch_dir(sf, "ivfq_layout")
@@ -7058,8 +7057,8 @@ def q_hard_negative_mine(spark, sf):
     mod-211 sample outgrows the driver-bounded guard, the fixture
     raises loudly instead of silently mining a truncated query set
     that would diverge from the (uncapped) oracle. Scale probes of
-    this family use the fixed-|Q| scripts (scripts/hardneg_ab.py),
-    not this fixture — see SCALE.md round 8."""
+    this family use a fixed-|Q| query sample, not this fixture —
+    see SCALE.md round 8."""
     e = load(spark, sf, "embeddings")
     qids = [r.vec_id for r in
             e.filter(F.col("vec_id") % 211 == 3).select("vec_id")
@@ -8592,7 +8591,7 @@ def q_image_near_dup_capped(spark, sf):
     the fixture's single mod-199 offset capped variety at ~199 images
     and sent bucket populations quadratic at sf1.0+ (SCALE.md r9
     adjudication) — and the Manku bucket guard at its DEFAULT cap 256,
-    exactly what scripts/image_probe.py priced out-of-registry. Real
+    exactly what SCALE.md round 9 priced out-of-registry. Real
     stdlib BMP encode+decode on originals, real zlib PNG on the
     recompressed twins (+1 brightness pairs; +17 checkerboard edits
     must NOT pair). The oracle replays pixels → dHash → the 22/21/21
@@ -8677,7 +8676,7 @@ def q_audio_near_dup_capped(spark, sf):
     with the corpus — the fixture's single mod-97 pattern kept ~97
     distinct clips and went quadratic at sf1.0 (the SCALE.md r9
     fixture-artifact adjudication; the deployed shape was priced only
-    in scripts/audio_probe.py) — and token_set_jaccard_pairs runs at
+    out-of-registry, same section) — and token_set_jaccard_pairs runs at
     its DEFAULT bucket cap 256. The oracle replays the Haitsma-Kalker
     sign-bit fold AND the per-token 2..256 count window, proving the
     cap semantics (full sizes, capped intersections) exactly."""
@@ -8707,7 +8706,7 @@ def q_audio_near_dup_capped(spark, sf):
 
 @register(
     "q_semantic_dedup_against_prod",
-    # the deployed config scripts/semagainst_prod.py priced out-of-registry
+    # the deployed config SCALE.md round 9 priced out-of-registry
     # (VERDICT r9 #3): planes=12 (4096 buckets, the fixture's 64 made the
     # join quadratic by construction) and the store-side degenerate-bucket
     # guard at cap 1024. The oracle replays the 12-plane bucket assignment,
@@ -8738,7 +8737,7 @@ def q_semantic_dedup_against_prod(spark, sf):
     exclusions are visible via dedup.overcap_bucket_stats). Same data
     split as the fixture: the store is the %3==0 vectors, the new
     month is %3==1 plus verbatim clones of the store (+500000 ids)
-    that must drop. scripts/semagainst_prod.py measured this shape at
+    that must drop. An out-of-registry probe (SCALE.md) measured it at
     25.5s vs the fixture's 314.9s at sf10; registering it makes the
     driver's own bench price it every round."""
     e = load(spark, sf, "embeddings")
@@ -9864,7 +9863,7 @@ def q_mojibake_repair(spark, sf):
 #: augmented corpus for the edit-distance fixture: every 5th doc gets a
 #: 6-edit twin (' zz zz' appended — two new trailing tokens leave most
 #: shingles, hence most bands, intact, so LSH surfaces the pair).
-#: Offset 10^10, matching scripts/editdist_probe.py: SCALE.md already
+#: Offset 10^10, matching the edit-distance scale probe: SCALE.md already
 #: prices 7.5M-doc corpora, where a 10^7 offset would collide twin ids
 #: with real doc_ids and fabricate pairs in the text equi-joins
 #: (ADVICE r10) — fixture and probe now share the collision-safe scheme

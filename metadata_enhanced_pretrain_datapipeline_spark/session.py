@@ -43,6 +43,34 @@ classes an earlier launch loaded, already parsed, from one file.
 - A stale archive (JDK or jars changed in place) is refused by the JVM,
   which then starts normally (``-Xshare:auto``).
 - Clear the cache by deleting the ``cds`` directory.
+
+Python worker memory: every concurrent Python runner of a task slot is a
+process PySpark forks from one daemon per executor, so what each worker
+holds privately, times the executor's cores, is the Python memory a run
+must size for. ``get_spark`` therefore names ``worker_daemon.py`` as
+``spark.python.daemon.module``:
+
+- The daemon imports the worker stack once before it forks: numpy,
+  pyarrow (``pyarrow.compute``), pandas, ``pyspark.worker``, and the
+  package with its worker-side modules (readers, HTML extraction, dedup,
+  tokens). Workers share those pages with it copy-on-write.
+- It calls ``importlib.invalidate_caches()`` once, so ``zipcache`` records
+  each zip archive's stat and no worker re-reads Spark's archives.
+- It runs ``gc.collect()`` and then ``gc.freeze()``. PySpark collects in
+  each reused worker after every task; a collection that walked the
+  preloaded objects would write their GC headers and un-share their
+  pages (and take ~20 ms a task).
+- It starts Arrow's jemalloc without its background thread (unless the
+  environment sets ``JE_ARROW_MALLOC_CONF``), so it forks with one thread.
+- Skipped, the launch then using PySpark's own daemon, when a JVM already
+  exists; when the caller sets ``spark.python.daemon.module`` or
+  ``spark.python.use.daemon`` (``PYSPARK_SUBMIT_ARGS``,
+  ``SPARK_SUBMIT_OPTS`` or a live ``spark-defaults.conf``); or when a
+  worker would not import this package from this directory: a daemon that
+  cannot import its module fails every Python UDF of the session. A worker
+  looks in the JVM's working directory (``python -m`` puts it first),
+  ``PYTHONPATH``, and the site directories of this interpreter, which the
+  check takes the workers to run.
 """
 
 from __future__ import annotations
@@ -53,6 +81,7 @@ import hashlib
 import json
 import os
 import shutil
+import site
 import subprocess
 import time
 
@@ -135,6 +164,27 @@ _CDS_CLASSPATH_ENVS = ("HADOOP_CONF_DIR", "YARN_CONF_DIR",
 #: a dump otherwise warns once per class of a signed jar (janino's)
 _CDS_QUIET = "-Xlog:cds*=off"
 
+#: the Python worker daemon (worker_daemon.py), the confs with which a
+#: caller picks a daemon, and the environment a launch reads them from
+_DAEMON_MODULE = f"{__package__}.worker_daemon"
+_DAEMON_CONFS = ("spark.python.daemon.module", "spark.python.use.daemon")
+_DAEMON_ENVS = ("PYSPARK_SUBMIT_ARGS", "SPARK_SUBMIT_OPTS")
+
+
+def _jvm_exists() -> bool:
+    """Whether a driver JVM runs already (an active context, a gateway, or
+    ``PYSPARK_GATEWAY_PORT`` from a launcher), so no launch options apply."""
+    from pyspark import SparkContext
+
+    return (SparkContext._active_spark_context is not None
+            or SparkContext._gateway is not None
+            or "PYSPARK_GATEWAY_PORT" in os.environ)
+
+
+def _conf_dir(spark_home: str) -> str:
+    """The Spark conf directory a launch reads spark-defaults.conf from."""
+    return os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+
 
 def _java() -> str | None:
     """The java binary spark-class runs: $JAVA_HOME's, else PATH's."""
@@ -216,12 +266,9 @@ def _cds_launch() -> tuple[str, str, str | None] | None:
     """(java options, conf directory, dump stem) for a driver JVM this
     call starts, the stem set when the launch writes the archive; None to
     launch exactly as without class data sharing."""
-    from pyspark import SparkContext
     from pyspark.find_spark_home import _find_spark_home
 
-    if (SparkContext._active_spark_context is not None
-            or SparkContext._gateway is not None
-            or "PYSPARK_GATEWAY_PORT" in os.environ):
+    if _jvm_exists():
         return None
     if any(m in os.environ.get(v, "")
            for v in _CDS_OPTION_ENVS for m in _CDS_CALLER_MARKS):
@@ -229,7 +276,7 @@ def _cds_launch() -> tuple[str, str, str | None] | None:
     if any(os.environ.get(v) for v in _CDS_CLASSPATH_ENVS):
         return None
     spark_home = _find_spark_home()
-    conf = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+    conf = _conf_dir(spark_home)
     if os.path.isdir(conf) and not all(
             n.endswith(".template") for n in os.listdir(conf)):
         return None
@@ -254,6 +301,42 @@ def _cds_launch() -> tuple[str, str, str | None] | None:
                 os.remove(p)
     stem = os.path.join(cache, f"{key}.{os.urandom(6).hex()}")
     return f"-XX:ArchiveClassesAtExit={stem}.part {_CDS_QUIET}", empty, stem
+
+
+def _worker_imports_package() -> bool:
+    """Whether ``python -m`` in the launched JVM's working directory and
+    environment imports this package from this directory: the first entry
+    holding it, of the working directory, ``PYTHONPATH`` and the site
+    directories, holds this one. A ``.pth`` or import-hook install reads as
+    not importable."""
+    here = os.path.dirname(os.path.abspath(__file__))
+    path = ([] if os.environ.get("PYTHONSAFEPATH") else [os.getcwd()]) \
+        + os.environ.get("PYTHONPATH", "").split(os.pathsep) \
+        + site.getsitepackages() \
+        + ([site.getusersitepackages()] if site.ENABLE_USER_SITE else [])
+    for entry in filter(None, path):
+        candidate = os.path.join(entry, os.path.basename(here))
+        if os.path.isdir(candidate):
+            return os.path.samefile(candidate, here)
+    return False
+
+
+def _daemon_module() -> str | None:
+    """The worker daemon module for a driver JVM this call starts; None to
+    leave PySpark's own daemon, as when the caller picks the daemon or a
+    worker could not import the package (its daemon would not start, and
+    every Python UDF of the session would fail)."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    if _jvm_exists() or any(k in os.environ.get(v, "")
+                            for v in _DAEMON_ENVS for k in _DAEMON_CONFS):
+        return None
+    defaults = os.path.join(_conf_dir(_find_spark_home()), "spark-defaults.conf")
+    with contextlib.suppress(OSError):
+        with open(defaults) as f:
+            if any(k in f.read() for k in _DAEMON_CONFS):
+                return None
+    return _DAEMON_MODULE if _worker_imports_package() else None
 
 
 def _await_dump(proc: subprocess.Popen) -> None:
@@ -329,6 +412,12 @@ def get_spark(app_name: str = "metadata-enhanced-pretrain-datapipeline-spark",
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
     )
+    try:
+        daemon = _daemon_module()
+    except OSError:
+        daemon = None
+    if daemon:
+        builder = builder.config("spark.python.daemon.module", daemon)
     try:
         cds = _cds_launch()
     except OSError:

@@ -16,10 +16,14 @@ size, ``mtime_ns``) differs from the one it saw at its last read. An
 importer with no record yet, or an archive that cannot be stat'ed, takes
 the original path. The result is what a re-read gives: a changed archive
 is re-read, and a new ``addPyFile`` zip is a new ``sys.path`` entry with
-its own importer. The package ``__init__`` installs it, so every worker
-that runs a package function (unpickled by reference, which imports the
-package) has it. The worker's next task re-reads once more, recording each
-archive's stat; the tasks after it skip the re-read.
+its own importer. The package ``__init__`` installs it. In a session
+``get_spark`` launched, the worker daemon (``worker_daemon.py``) imports
+the package and calls ``importlib.invalidate_caches()`` once before it
+forks any worker, so every importer has its record and no worker re-reads
+an archive, from its first task on. A worker forked by PySpark's own
+daemon gets the guard when it first runs a package function (unpickled by
+reference, which imports the package); its next task re-reads once more,
+recording each archive's stat, and the tasks after it skip the re-read.
 """
 
 from __future__ import annotations
