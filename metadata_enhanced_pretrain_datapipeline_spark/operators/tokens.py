@@ -230,20 +230,6 @@ def _write_idx(idx_path: str, lengths: np.ndarray, code: int, itemsize: int) -> 
         i.write(np.arange(len(lengths) + 1, dtype=np.int64).tobytes(order="C"))
 
 
-def write_megatron_partition(token_lists: list[list[int]], bin_path: str,
-                             idx_path: str, vocab_size: int = 50000) -> int:
-    """Write one partition's docs as a .bin/.idx pair (dtype rule:
-    :func:`_token_dtype`). Returns total token count."""
-    dtype, code = _token_dtype(vocab_size)
-    arrays = [np.asarray(toks, dtype=dtype) for toks in token_lists]
-    with open(bin_path, "wb") as b:
-        for arr in arrays:
-            b.write(arr.tobytes(order="C"))
-    lengths = np.array([len(a) for a in arrays], np.int64)
-    _write_idx(idx_path, lengths, code, np.dtype(dtype).itemsize)
-    return int(lengths.sum())
-
-
 class _ShardFiles:
     """One task's Megatron shard writer: a ``shard_NNNNN.bin``/``.idx``
     pair per shard under ``out_dir``, one per reference rank
@@ -481,7 +467,7 @@ def write_megatron_packed(df: DataFrame, out_dir: str, order_col: str = "doc_id"
 
 def read_megatron_partition(bin_path: str, idx_path: str) -> tuple[np.ndarray, np.ndarray]:
     """Read a .bin/.idx pair back: (per-doc lengths, flat token array) —
-    the verification twin of write_megatron_partition (same layout:
+    the verification twin of :class:`_ShardFiles` (same layout:
     magic, version, dtype code, counts, int32 lengths, int64 pointers,
     int64 doc index; then the packed token buffer)."""
     with open(idx_path, "rb") as f:

@@ -57,7 +57,6 @@ def register(name: str, oracle: str | None = None):
             tune_for_oracle(spark)
             return fn(spark, sf_dir)
 
-        wrapped.__wrapped__ = fn  # _changed_queries introspects the real fn
         _REGISTRY[name] = (wrapped, oracle)
         return fn
 
@@ -2236,324 +2235,16 @@ def q_flagship(spark, sf):
 
 
 # ---------------------------------------------------------------------------
-
-
-# The per-round driver correctness run records the registry's FIRST ~50
-# entries only (CORRECTNESS_r01.json == the first 50 registered names,
-# verbatim, zero errors → a hard row cap, not failures).  To get every
-# query a hard driver row across rounds, emission order rotates: queries
-# with no CORRECTNESS row in ANY prior round come first (registration
-# order), then the rest ordered by how often they have been checked —
-# the union of rounds covers the whole registry.  The prior-round row
-# sets are read from CORRECTNESS_r*.json at the repo root at call time;
-# _R01_CHECKED is the static fallback when none are readable.
-# COVERAGE.md documents the rotation.
-_R01_CHECKED = [
-    "q_scan_parquet", "q_length_filter", "q_predicate_filter",
-    "q_threshold_filter_lt", "q_threshold_filter_ge",
-    "q_conjunctive_threshold", "q_try_cast_valid", "q_substring",
-    "q_split_columns", "q_hash_sample", "q_shard_select", "q_dedup_exact",
-    "q_dup_count", "q_dedup_exact_text", "q_id_anti_join",
-    "q_domain_blocklist", "q_domain_left_join", "q_join_inner",
-    "q_join_multiway", "q_join_semi", "q_join_anti", "q_join_outer",
-    "q_union_all", "q_except_ids", "q_replicate_buckets", "q_group_count",
-    "q_token_sum", "q_quantile_threshold", "q_quantile_gate",
-    "q_grouping_sets", "q_top_k", "q_limit", "q_deterministic_shuffle",
-    "q_positional_split", "q_balanced_sample", "q_pii_scrub",
-    "q_url_parse_features", "q_template_concat", "q_chat_flatten",
-    "q_bidirectional_explode", "q_adapter_template", "q_array_slice",
-    "q_chunk_explode_regroup", "q_dot_product_score", "q_array_max_score",
-    "q_embedding_topk", "q_ann_lsh_buckets", "q_quality_score",
-    "q_token_count", "q_doc_fingerprint",
-]
-
-
-def _checked_counts() -> tuple[dict[str, int], set[str]]:
-    """(times each name appeared in a prior driver correctness run,
-    names whose prior rows were ALL rows-only — hash never checked)."""
-    import glob as _glob
-    import json as _json
-    import os as _os
-
-    root = _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-    counts: dict[str, int] = {}
-    hash_checked: set[str] = set()
-    for p in sorted(_glob.glob(_os.path.join(root, "CORRECTNESS_r*.json"))):
-        try:
-            with open(p) as f:
-                for name, row in _json.load(f).items():
-                    counts[name] = counts.get(name, 0) + 1
-                    if isinstance(row, dict) and row.get("hash_match"):
-                        hash_checked.add(name)
-        except (OSError, ValueError, AttributeError):
-            continue
-    if not counts:
-        return {n: 1 for n in _R01_CHECKED}, set(_R01_CHECKED)
-    return counts, hash_checked
-
-
-def _changed_queries() -> set[str]:
-    """Names whose implementation changed since the last driver
-    correctness run — so the rotation re-checks every query touched this
-    round instead of waiting ~2.4 rounds for its stale-first turn.
-
-    Baseline = the commit that added the newest CORRECTNESS_r*.json (the
-    driver commits artifacts at round end, so that commit IS the
-    last-checked state). A query counts as changed when (a) its own
-    function source in queries.py differs from the baseline (AST-level:
-    whole-file churn in queries.py does NOT flag untouched queries), or
-    (b) any package module file its source references changed since the
-    baseline (committed or working-tree). Any git/parse failure degrades
-    to 'nothing changed' — the rotation then behaves exactly as before.
-    """
-    import ast
-    import glob as _glob
-    import inspect
-    import os as _os
-    import re as _re
-    import subprocess
-
-    root = _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-
-    def git(*args: str) -> str:
-        return subprocess.run(
-            ["git", "-C", root, *args], capture_output=True, text=True,
-            timeout=30, check=True,
-        ).stdout
-
-    def fn_sources(src: str) -> dict[str, str]:
-        """name -> source segment of each module-level function, decorator
-        lines included (inspect.getsource includes them, and an oracle-SQL
-        edit inside @register(...) must flag the query as changed)."""
-        tree = ast.parse(src)
-        lines = src.splitlines(keepends=True)
-        out = {}
-        for node in tree.body:
-            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                start = min(
-                    [node.lineno] + [d.lineno for d in node.decorator_list]
-                )
-                out[node.name] = "".join(lines[start - 1:node.end_lineno])
-        return out
-
-    try:
-        corrs = _glob.glob(_os.path.join(root, "CORRECTNESS_r*.json"))
-        if not corrs:
-            return set()
-        newest = max(corrs)  # r01 < r02 < ... lexically
-        base = git("log", "-1", "--format=%H", "--",
-                   _os.path.basename(newest)).strip()
-        if not base:
-            return set()
-        pkg = _os.path.basename(_os.path.dirname(_os.path.abspath(__file__)))
-        changed_files = {
-            f for f in git("diff", "--name-only", base).splitlines()
-            if f.startswith(pkg + "/")
-        }
-        qfile = f"{pkg}/queries.py"
-        old_fns = {}
-        if qfile in changed_files:
-            old_fns = fn_sources(git("show", f"{base}:{qfile}"))
-
-        # FUNCTION-level granularity for changed package MODULES (round
-        # 7): flagging every query that references a changed FILE floods
-        # the tier past the driver's 50-row window whenever a widely-used
-        # module gains one new operator (sampling.py's keyed_rank flagged
-        # every leakage-split/host-cap/mix query). A module's "changed
-        # names" = top-level functions and simple assignments whose
-        # source differs from the baseline, closed transitively over
-        # in-module references (a function whose body uses a changed
-        # helper/constant is itself behavior-changed); a query is flagged
-        # only if its body references one. Any OTHER top-level difference
-        # (imports, classes, bare statements, module docstring) degrades
-        # to whole-module flagging, as does any parse/git failure.
-        mod_changed_cache: dict = {}
-
-        def module_changed_names(rel: str):
-            if rel in mod_changed_cache:
-                return mod_changed_cache[rel]
-            result = None
-            try:
-                old_src = git("show", f"{base}:{rel}")
-                with open(_os.path.join(root, rel)) as fh:
-                    new_src = fh.read()
-
-                def parts(msrc: str):
-                    tree = ast.parse(msrc)
-                    lines = msrc.splitlines(keepends=True)
-                    funcs, assigns, residue = {}, {}, []
-                    for node in tree.body:
-                        if isinstance(node, (ast.FunctionDef,
-                                             ast.AsyncFunctionDef)):
-                            start = min([node.lineno]
-                                        + [d.lineno
-                                           for d in node.decorator_list])
-                            funcs[node.name] = "".join(
-                                lines[start - 1:node.end_lineno])
-                            continue
-                        targets = None
-                        if isinstance(node, ast.Assign):
-                            targets = node.targets
-                        elif isinstance(node, ast.AnnAssign):
-                            targets = [node.target]
-                        if targets and all(isinstance(t, ast.Name)
-                                           for t in targets):
-                            seg = "".join(
-                                lines[node.lineno - 1:node.end_lineno])
-                            for t in targets:
-                                assigns[t.id] = seg
-                        else:
-                            residue.append("".join(
-                                lines[node.lineno - 1:node.end_lineno]))
-                    return funcs, assigns, residue
-
-                of, oa, ores = parts(old_src)
-                nf, na, nres = parts(new_src)
-                if ores == nres:
-                    names = {n for n in set(of) | set(nf)
-                             if of.get(n) != nf.get(n)}
-                    names |= {n for n in set(oa) | set(na)
-                              if oa.get(n) != na.get(n)}
-                    # closure over functions AND assignments: an assign
-                    # whose TEXT is unchanged but whose VALUE references a
-                    # changed function (CONST = helper(...)) is itself
-                    # behavior-changed (ADVICE r7) — without it a query
-                    # referencing only CONST escapes re-verification
-                    ftoks = {n: set(_re.findall(r"\b([A-Za-z_]\w*)\b", s))
-                             for src_map in (nf, na)
-                             for n, s in src_map.items()}
-                    while True:
-                        grew = {n for n, ts in ftoks.items()
-                                if n not in names and ts & names}
-                        if not grew:
-                            break
-                        names |= grew
-                    result = names
-            except Exception:
-                result = None
-            mod_changed_cache[rel] = result
-            return result
-
-        changed: set[str] = set()
-        for name, (fn, _oracle) in _REGISTRY.items():
-            raw = inspect.unwrap(getattr(fn, "__wrapped__", fn))
-            try:
-                src = inspect.getsource(raw)
-            except (OSError, TypeError):
-                changed.add(name)  # can't prove unchanged -> re-check
-                continue
-            if qfile in changed_files and old_fns.get(raw.__name__) != src:
-                changed.add(name)
-                continue
-            # modules the query touches: EVERY identifier in the body is
-            # resolved through the function's globals — modules (dotted
-            # use) via __file__, and bare helpers imported at queries.py
-            # top level (tokens_ws, canonical_url, ...) via their defining
-            # module — plus in-body `from pkg... import x` lines. Helpers
-            # that live in queries.py ITSELF (load, _scratch_dir, ...)
-            # compare at function level like the query body does — adding
-            # the file would flag the whole registry on any queries.py
-            # churn.
-            mods = set()
-            helper_changed = False
-            qtoks = set(_re.findall(r"\b([A-Za-z_]\w*)\b", src))
-            for tok in qtoks:
-                if tok == "register":
-                    # every query's decorator references the registration
-                    # machinery; a register() edit is uniform across the
-                    # registry (any breakage shows in the first driver
-                    # rows regardless), so it must not flood the tier
-                    continue
-                obj = raw.__globals__.get(tok)
-                if obj is None:
-                    continue
-                mod_file = getattr(obj, "__file__", None)
-                if mod_file is None:
-                    defining = inspect.getmodule(obj)
-                    mod_file = getattr(defining, "__file__", None)
-                if not (mod_file and pkg in mod_file):
-                    continue
-                rel = _os.path.relpath(mod_file, root)
-                if rel != qfile:
-                    mods.add(rel)
-                elif qfile in changed_files and callable(obj):
-                    try:
-                        hsrc = inspect.getsource(inspect.unwrap(obj))
-                    except (OSError, TypeError):
-                        helper_changed = True
-                        continue
-                    hname = getattr(obj, "__name__", tok)
-                    if old_fns.get(hname) != hsrc:
-                        helper_changed = True
-            if helper_changed:
-                changed.add(name)
-                continue
-            for m in _re.finditer(
-                r"from\s+(" + pkg + r"[.\w]*)\s+import\s+\(?([\w,\s]+)\)?", src
-            ):
-                base_mod, names = m.group(1), m.group(2)
-                # both shapes: `from pkg.sub import module` (module file is
-                # sub/module.py) and `from pkg.sub.module import fn` (file
-                # is sub/module.py itself)
-                mods.add(base_mod.replace(".", "/") + ".py")
-                for imported in names.split(","):
-                    words = imported.split()  # drop any 'as alias' suffix
-                    if words:
-                        mods.add(
-                            (base_mod + "." + words[0]).replace(".", "/")
-                            + ".py"
-                        )
-            for rel in mods & changed_files:
-                cn = module_changed_names(rel)
-                if cn is None or (qtoks & cn):
-                    changed.add(name)
-                    break
-        return changed
-    except Exception:
-        return set()
-
-
-_ROTATION: list[str] | None = None
-
-
-def _rotated() -> list[str]:
-    # computed once per process: all_queries() and all_oracles() MUST see
-    # the same ordering even if a CORRECTNESS file lands between the calls
-    # (a positional pairing of the two dicts would otherwise mismatch)
-    global _ROTATION
-    if _ROTATION is None:
-        counts, hash_checked = _checked_counts()
-        changed = _changed_queries()
-        order = {n: i for i, n in enumerate(_REGISTRY)}
-
-        def tier(n: str) -> tuple:
-            seen = counts.get(n, 0)
-            # a query whose prior driver rows were all rows-only but which
-            # NOW has an oracle is a conversion — surface it right after
-            # never-checked names so the driver records its first hash-
-            # checked row this round instead of some round later
-            converted = (
-                seen > 0 and n not in hash_checked
-                and _REGISTRY[n][1] is not None
-            )
-            group = (0 if seen == 0 else
-                     (1 if converted else (2 if n in changed else 3)))
-            return (group, seen, order[n])
-
-        _ROTATION = sorted(_REGISTRY, key=tier)
-    return _ROTATION
+# Both views emit in registration order, including the queries registered
+# further down this module (they are built at call time).
 
 
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {name: _REGISTRY[name][0] for name in _rotated()}
+    return {name: fn for name, (fn, _oracle) in _REGISTRY.items()}
 
 
 def all_oracles() -> dict[str, str]:
-    return {
-        name: _REGISTRY[name][1]
-        for name in _rotated()
-        if _REGISTRY[name][1] is not None
-    }
+    return {name: sql for name, (_fn, sql) in _REGISTRY.items() if sql is not None}
 
 
 # ===========================================================================

@@ -4,9 +4,9 @@
    query must emit only scalar top-level columns. The external driver
    canonicalizes results with a pandas ``sort_values`` over all output
    columns, which raises ``unhashable type: 'list'`` on ArrayType/
-   MapType values — that is exactly how CORRECTNESS_r04's two red rows
-   (q_inverted_index, q_flag_violations) happened despite both being
-   locally oracle-green. †-queries (no oracle) are exempt: the driver's
+   MapType values — that is exactly how a driver run once failed
+   q_inverted_index and q_flag_violations despite both being locally
+   oracle-green. †-queries (no oracle) are exempt: the driver's
    rows-only check never hashes their values.
 
 2. Physical-plan antipattern guard (round 5): no registered query may
@@ -22,11 +22,16 @@
    inside the query function, so THIS test's build pass executes them:
    a layout regression (lost PartitionFilters, a sneaky Exchange, a
    missing dynamicpruningexpression) surfaces here as a build error.
+
+4. Emission order: ``queries()`` and ``oracle_sql()`` list the registry in
+   registration order, without subprocesses or file reads.
 """
 
 from __future__ import annotations
 
+import builtins
 import os
+import subprocess
 
 import pytest
 from pyspark.sql import types as T
@@ -85,6 +90,17 @@ def _has_container(dt: T.DataType) -> bool:
     if isinstance(dt, T.StructType):
         return any(_has_container(f.dataType) for f in dt.fields)
     return False
+
+
+def test_registry_emits_in_registration_order(monkeypatch):
+    def forbidden(*args, **kwargs):
+        raise AssertionError("the registry must not start a process or read a file")
+
+    monkeypatch.setattr(subprocess, "run", forbidden)
+    monkeypatch.setattr(builtins, "open", forbidden)
+    names = list(q._REGISTRY)
+    assert list(q.all_queries()) == names
+    assert list(q.all_oracles()) == [n for n in names if q._REGISTRY[n][1] is not None]
 
 
 @pytest.mark.skipif(

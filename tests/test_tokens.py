@@ -36,10 +36,11 @@ def test_megatron_idx_format_golden(tmp_path):
     """Byte-exact .idx spec (reference megatron_tokenizer.py:119-174):
     MMIDIDX magic, <Q version=1, <B dtype code, <Q counts, int32 lengths,
     int64 pointers, int64 doc indices."""
-    docs = [[1, 2, 3], [4, 5]]
-    bin_p, idx_p = str(tmp_path / "t.bin"), str(tmp_path / "t.idx")
-    total = tokens.write_megatron_partition(docs, bin_p, idx_p, vocab_size=50000)
-    assert total == 5
+    with tokens._ShardFiles(str(tmp_path), 50000) as files:
+        files.append(0, np.array([1, 2, 3, 4, 5]), np.array([3, 2]))
+    (summary,) = files.summary()
+    assert summary.to_pydict() == {"shard": [0], "n_tokens": [5]}
+    bin_p, idx_p = str(tmp_path / "shard_00000.bin"), str(tmp_path / "shard_00000.idx")
     raw = open(idx_p, "rb").read()
     assert raw[:9] == b"MMIDIDX\x00\x00"
     off = 9
