@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from metadata_enhanced_pretrain_datapipeline_spark.functions.text import _bind
+
 #: Self-authored reference paragraphs, one per language, ASCII-only
 #: (accents stripped) so collation and lower() agree across engines.
 #: Function words dominate trigram profiles, which is what makes ~80
@@ -114,11 +116,10 @@ def trigrams(text: Column) -> Column:
     empty generate_series (r12 find; the two engines must agree on
     degenerate docs)."""
     return F.filter(
-        F.get(F.transform(F.array(normalized_text(text)), lambda t:
+        _bind(normalized_text(text), lambda t:
               F.transform(F.sequence(F.lit(1),
-                                     F.greatest(F.length(t) - 2,
-                                                F.lit(0))),
-                          lambda i: F.substring(t, i, 3))), 0),
+                                     F.greatest(F.length(t) - 2, F.lit(0))),
+                          lambda i: F.substring(t, i, 3))),
         lambda g: F.length(g) == 3)
 
 

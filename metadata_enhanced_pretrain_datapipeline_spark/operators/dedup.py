@@ -2697,13 +2697,6 @@ def winnow_dedup_against(new_docs: DataFrame, seen_fps: DataFrame,
     return new_docs.join(hits, id_col, "left_anti")
 
 
-def lsh_collision_prob(s: float, bands: int, rows: int) -> float:
-    """MinHash-LSH candidate probability for a pair at Jaccard ``s``
-    under (``bands`` x ``rows``) banding: ``1 - (1 - s^rows)^bands``
-    (Leskovec/Rajaraman/Ullman, MMDS ch. 3 — the S-curve)."""
-    return 1.0 - (1.0 - s ** rows) ** bands
-
-
 def choose_lsh_params(threshold: float,
                       num_hashes: int = 32) -> tuple[int, int]:
     """Pick the (bands, rows_per_band) factorization of ``num_hashes``

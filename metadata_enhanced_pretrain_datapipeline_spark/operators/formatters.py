@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from metadata_enhanced_pretrain_datapipeline_spark.functions.text import _bind
+
 # PII patterns (reference pii_formatter.py:63-70). The email pattern is a
 # simplified RE2-compatible analogue of the reference's RFC-ish regex (the
 # full form needs constructs DuckDB's RE2 rejects); the spaced IBAN pattern
@@ -223,7 +225,7 @@ def _luhn_ok(cand: Column) -> Column:
             ).otherwise(d.cast("int")))
         return F.aggregate(vals, F.lit(0), lambda a, x: a + x) % 10 == 0
 
-    return F.get(F.transform(F.array(digits), body), 0)
+    return _bind(digits, body)
 
 
 def cc_candidates(text: Column) -> Column:

@@ -14,8 +14,9 @@ tokenizes AFTER the sort (:func:`_tokens_by_shard`): each doc is
 tokenized once, not again in the range-partitioning sample job and the
 shuffle map. One mapInArrow per partition then folds and, for the sinks,
 writes: token arrays travel as Arrow int32 buffers (no pickle, no
-per-token Python objects), the packing fold (:func:`_pack_fold`) works on
-numpy views, and the shard writer (:class:`_ShardFiles`) appends to the
+per-token Python objects), one packing fold (:func:`_pack_fold`, behind
+:func:`pack_sequences`, :func:`pack_with_metadata` and
+:func:`write_megatron_packed`) works on numpy views, and the shard writer (:class:`_ShardFiles`) appends to the
 .bin files as the fold emits. Each partition ≡ one reference rank, which
 also starts fresh at offset 0 (megatron_tokenizer_context.py:262) —
 parity documented.
@@ -44,11 +45,12 @@ def _list_views(col: "pa.Array") -> tuple[np.ndarray, np.ndarray]:
     return np.asarray(col.offsets), np.asarray(col.values)
 
 
-def _seq_batch(shards: list[int], idxs: list[int], flat_chunks: list[np.ndarray],
-               pads: list[int], seq_len: int, extra: dict[str, list[int]] | None = None
-               ) -> Iterator["pa.RecordBatch"]:
-    """Assemble packed sequences (each exactly seq_len tokens) into Arrow
-    batches: a single values buffer + uniform offsets, no per-token objects.
+def _seq_batch(runs: list[tuple[int, int, np.ndarray, int, int]], seq_len: int,
+               meta: bool = False) -> Iterator["pa.RecordBatch"]:
+    """The packed sequences of :func:`_pack_fold` ``runs`` as Arrow
+    batches of (shard, seq_idx, tokens, n_pad[, n_meta_tokens]) rows, one
+    per sequence, each run's pad and meta counts on its first row: a
+    single values buffer + uniform offsets, no per-token objects.
 
     Yields one batch normally; splits when a single batch's token count
     would overflow the int32 list offsets (n * seq_len >= 2^31 — e.g. a
@@ -56,28 +58,27 @@ def _seq_batch(shards: list[int], idxs: list[int], flat_chunks: list[np.ndarray]
     column type a plain list<int32> (Spark's mapInArrow schema), vs the
     large_list alternative that Spark's Arrow reader doesn't accept.
     """
-    n = len(shards)
-    flat = (np.concatenate(flat_chunks).astype(np.int32, copy=False)
-            if flat_chunks else np.empty(0, np.int32))
+    n_seq = np.array([len(r[2]) // seq_len for r in runs], np.int64)
+    first = np.cumsum(n_seq) - n_seq  # row of each run's first sequence
+    n = int(n_seq.sum())
+    shard = np.repeat(np.array([r[0] for r in runs], np.int64), n_seq)
+    seq_idx = np.repeat(np.array([r[1] for r in runs], np.int64) - first, n_seq) + np.arange(n)
+    fields = {"n_pad": 3, "n_meta_tokens": 4} if meta else {"n_pad": 3}
+    counts = {name: np.zeros(n, np.int32) for name in fields}
+    for name, k in fields.items():
+        counts[name][first] = [r[k] for r in runs]
+    flat = np.concatenate([r[2] for r in runs]).astype(np.int32, copy=False)
     cap = max(1, ((1 << 31) - 1) // max(seq_len, 1))  # rows per batch
     for lo in range(0, n, cap):
         hi = min(lo + cap, n)
-        m = hi - lo
         tok_col = pa.ListArray.from_arrays(
-            pa.array((np.arange(m + 1) * seq_len).astype(np.int32)),
+            pa.array((np.arange(hi - lo + 1) * seq_len).astype(np.int32)),
             pa.array(flat[lo * seq_len:hi * seq_len], type=pa.int32()),
         )
-        names = ["shard", "seq_idx", "tokens", "n_pad"]
-        cols = [
-            pa.array(np.asarray(shards[lo:hi], np.int64)),
-            pa.array(np.asarray(idxs[lo:hi], np.int64)),
-            tok_col,
-            pa.array(np.asarray(pads[lo:hi], np.int32)),
-        ]
-        for name, vals in (extra or {}).items():
-            names.append(name)
-            cols.append(pa.array(np.asarray(vals[lo:hi], np.int32)))
-        yield pa.RecordBatch.from_arrays(cols, names)
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(shard[lo:hi]), pa.array(seq_idx[lo:hi]), tok_col,
+             *[pa.array(v[lo:hi]) for v in counts.values()]],
+            ["shard", "seq_idx", "tokens", *counts])
 
 
 def tokenize_ws(text: Column, vocab_size: int = 50000) -> Column:
@@ -126,46 +127,117 @@ def _shard_runs(shards_np: np.ndarray) -> Iterator[tuple[int, int, int]]:
         yield int(shards_np[s]), int(s), int(e)
 
 
-def _pack_fold(batches: Iterator["pa.RecordBatch"], seq_len: int, pad_id: int
-               ) -> Iterator[list[tuple[int, int, np.ndarray, int]]]:
-    """The W2 packing fold over (shard, toks) batches sorted by shard,
-    then document order: concatenate each shard's token stream into
-    seq_len sequences, carrying the remainder across documents and
-    batches, and pad each shard's final partial sequence with pad_id.
+# Metadata conditioning (reference megatron_tokenizer_context.py:210-356,
+# pack loop 283-334) marks a document's sequences with <BOC> meta <EOC>
+# token runs.
+BOC_ID = 2
+EOC_ID = 3
+
+
+class _Carry:
+    """One shard's fold state: the pending token chunks (``total`` tokens,
+    a partial sequence after each drain) and, for the next sequence
+    emitted, its index and the pad and meta counts it carries — the
+    reference's per-rank counters."""
+    __slots__ = ("chunks", "total", "counter", "pad", "meta")
+
+    def __init__(self):
+        self.chunks: list[np.ndarray] = []
+        self.total = self.counter = self.pad = self.meta = 0
+
+    def add(self, arr: np.ndarray) -> None:
+        if len(arr):
+            self.chunks.append(arr)
+            self.total += len(arr)
+
+
+def _pack_fold(batches: Iterator["pa.RecordBatch"], seq_len: int, pad_id: int,
+               meta: bool = False, per_sequence: bool = False
+               ) -> Iterator[list[tuple[int, int, np.ndarray, int, int]]]:
+    """The W2 packing fold over (shard, toks[, mtoks]) batches sorted by
+    shard, then document order — the one fold behind
+    :func:`pack_sequences` and :func:`pack_with_metadata` (rows) and
+    :func:`write_megatron_packed` (shard files). Each shard's token
+    stream is cut into seq_len sequences, the remainder carried across
+    documents and batches (megatron_tokenizer_context.py:301-324; each
+    shard ≈ one reference rank starting fresh, :262), and the final
+    partial sequence padded with pad_id (:302).
+
+    With ``meta``, a [BOC_ID, *mtoks, EOC_ID] run goes before each
+    document, or, with ``per_sequence``, at the start of every sequence
+    the document spans (:314-322). A run never straddles a boundary: if
+    it does not fit in the current sequence's remainder, the remainder is
+    padded and the run starts the next sequence. A run longer than a
+    sequence is cut to [BOC_ID, *mtoks[:seq_len - 2], EOC_ID] (:296-298).
+    Without ``meta`` each shard's tokens of a batch are added at once, no
+    per-document loop.
 
     Yields, per input batch that completes a sequence and once for the
     padded tails, a list of runs ``(shard, seq_idx of the run's first
-    sequence, the run's tokens flat (a multiple of seq_len), pad count of
-    the run's last sequence)``. The one fold behind
-    :func:`pack_sequences` (rows) and :func:`write_megatron_packed`
-    (shard files)."""
-    carry: dict[int, np.ndarray] = {}
-    counters: dict[int, int] = {}
-    empty = np.empty(0, np.int32)
+    sequence, the run's tokens flat (a multiple of seq_len), pad count,
+    meta token count)``; both counts belong to the run's first sequence."""
+    states: dict[int, _Carry] = {}
+    boc, eoc = np.array([BOC_ID], np.int32), np.array([EOC_ID], np.int32)
+
+    def drain(sh: int, st: _Carry, runs: list) -> None:
+        if st.total < seq_len:
+            return
+        buf = st.chunks[0] if len(st.chunks) == 1 else np.concatenate(st.chunks)
+        n_full = st.total // seq_len
+        runs.append((sh, st.counter, buf[:n_full * seq_len], st.pad, st.meta))
+        rest = buf[n_full * seq_len:]
+        st.chunks = [np.array(rest, copy=True)] if len(rest) else []
+        st.total = len(rest)
+        st.counter += n_full
+        st.pad = st.meta = 0
+
+    def inject(sh: int, st: _Carry, run: np.ndarray, runs: list) -> None:
+        room = seq_len - st.total % seq_len
+        if room < len(run):
+            st.add(np.full(room, pad_id, np.int32))
+            st.pad += room
+            drain(sh, st, runs)
+        st.add(run)
+        st.meta += len(run)
+
     for batch in batches:
         shards_np = np.asarray(batch.column(batch.schema.get_field_index("shard")))
         if len(shards_np) == 0:
             continue
         offs, vals = _list_views(batch.column(batch.schema.get_field_index("toks")))
-        runs = []
+        if meta:
+            m_offs, m_vals = _list_views(batch.column(batch.schema.get_field_index("mtoks")))
+        runs: list = []
         for sh, s, e in _shard_runs(shards_np):
-            chunk = vals[offs[s]:offs[e]]
-            prev = carry.get(sh, empty)
-            buf = np.concatenate((prev, chunk)) if len(prev) else chunk
-            n_full = len(buf) // seq_len
-            if n_full:
-                c = counters.get(sh, 0)
-                runs.append((sh, c, buf[: n_full * seq_len], 0))
-                counters[sh] = c + n_full
-            carry[sh] = np.array(buf[n_full * seq_len:], copy=True)
+            st = states.setdefault(sh, _Carry())
+            if not meta:
+                st.add(vals[offs[s]:offs[e]])
+                drain(sh, st, runs)
+                continue
+            for r in range(s, e):
+                doc = vals[offs[r]:offs[r + 1]]
+                run = np.concatenate((boc, m_vals[m_offs[r]:m_offs[r + 1]], eoc))
+                if len(run) > seq_len:
+                    run = np.concatenate((run[:seq_len - 1], eoc))
+                inject(sh, st, run, runs)
+                if not per_sequence:
+                    st.add(doc)
+                else:  # re-inject at every boundary the document crosses
+                    pos = 0
+                    while pos < len(doc):
+                        if st.total and st.total % seq_len == 0:
+                            drain(sh, st, runs)
+                            inject(sh, st, run, runs)
+                        take = min(seq_len - st.total % seq_len, len(doc) - pos)
+                        st.add(doc[pos:pos + take])
+                        pos += take
+                drain(sh, st, runs)
         if runs:
             yield runs
-    tails = []
-    for sh, buf in carry.items():
-        if len(buf):
-            pad = seq_len - len(buf)
-            tails.append((sh, counters.get(sh, 0),
-                          np.concatenate((buf, np.full(pad, pad_id, np.int32))), pad))
+    tails = [(sh, st.counter,
+              np.concatenate(st.chunks + [np.full(seq_len - st.total, pad_id, np.int32)]),
+              seq_len - st.total + st.pad, st.meta)
+             for sh, st in states.items() if st.total]
     if tails:
         yield tails
 
@@ -185,15 +257,35 @@ def pack_sequences(df: DataFrame, order_col: str, text_col: str = "text",
 
     def fold(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
         for runs in _pack_fold(batches, seq_len, pad_id):
-            out_s: list[int] = []; out_i: list[int] = []; out_p: list[int] = []
-            for sh, first, flat, pad in runs:
-                n = len(flat) // seq_len
-                out_s.extend([sh] * n)
-                out_i.extend(range(first, first + n))
-                out_p.extend([0] * (n - 1) + [pad])
-            yield from _seq_batch(out_s, out_i, [r[2] for r in runs], out_p, seq_len)
+            yield from _seq_batch(runs, seq_len)
 
     return arranged.mapInArrow(fold, "shard long, seq_idx long, tokens array<int>, n_pad int")
+
+
+def pack_with_metadata(df: DataFrame, order_col: str, text_col: str = "text",
+                       meta_col: str = "meta", seq_len: int = 4096,
+                       pad_id: int = 1, shards: int = 8,
+                       per_sequence: bool = False,
+                       meta_max_chars: int = 50,
+                       vocab_size: int = 50000) -> DataFrame:
+    """W2 full form — metadata-conditioned packing: :func:`pack_sequences`
+    with a <BOC> meta <EOC> run (meta cut to ``meta_max_chars`` chars)
+    before each document, or at the start of every sequence a document
+    spans (``per_sequence``); placement rules in :func:`_pack_fold`.
+
+    Returns (shard, seq_idx, tokens array<int>, n_pad, n_meta_tokens).
+    """
+    arranged = _tokens_by_shard(
+        df, order_col, shards,
+        {"toks": F.col(text_col), "mtoks": F.substring(F.col(meta_col), 1, meta_max_chars)},
+        vocab_size)
+
+    def fold(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+        for runs in _pack_fold(batches, seq_len, pad_id, meta=True, per_sequence=per_sequence):
+            yield from _seq_batch(runs, seq_len, meta=True)
+
+    return arranged.mapInArrow(
+        fold, "shard long, seq_idx long, tokens array<int>, n_pad int, n_meta_tokens int")
 
 
 # ---------------------------------------------------------------------------
@@ -302,146 +394,6 @@ def write_megatron(df: DataFrame, out_dir: str, text_col: str = "text",
     arranged.mapInArrow(write_part, "shard long, n_tokens long").collect()
 
 
-# ---------------------------------------------------------------------------
-# W2 full form — metadata-conditioned packing
-# (reference megatron_tokenizer_context.py:210-356, pack loop 283-334):
-# inject <BOC> meta <EOC> token runs at sequence-aligned positions, once per
-# document or once per sequence; pad with pad_id when a meta run would
-# straddle a boundary (:302); truncate meta to 50 chars when longer than a
-# sequence (:296-298); offset carries across documents within a shard
-# (:301-324; each shard ≈ one reference rank starting fresh, :262).
-# ---------------------------------------------------------------------------
-
-BOC_ID = 2
-EOC_ID = 3
-
-
-def pack_with_metadata(df: DataFrame, order_col: str, text_col: str = "text",
-                       meta_col: str = "meta", seq_len: int = 4096,
-                       pad_id: int = 1, shards: int = 8,
-                       per_sequence: bool = False,
-                       meta_max_chars: int = 50,
-                       vocab_size: int = 50000) -> DataFrame:
-    """Returns (shard, seq_idx, tokens array<int>, n_pad, n_meta_tokens).
-
-    Meta runs are [BOC_ID, *tokenize(meta), EOC_ID] placed at the start of
-    the document (default) or re-injected at the start of every sequence a
-    document spans (``per_sequence``, :314-322). A run never straddles a
-    boundary: if it does not fit in the current sequence's remainder, the
-    remainder is padded and the run starts the next sequence (:302).
-    """
-    arranged = _tokens_by_shard(
-        df, order_col, shards,
-        {"toks": F.col(text_col), "mtoks": F.substring(F.col(meta_col), 1, meta_max_chars)},
-        vocab_size)
-
-    schema = "shard long, seq_idx long, tokens array<int>, n_pad int, n_meta_tokens int"
-
-    class _Shard:
-        """Per-shard fold state: pending token chunks (total < seq_len after
-        each drain) plus the pad/meta counts attributed to the NEXT emitted
-        sequence — same attribution as the reference's per-rank counters."""
-        __slots__ = ("chunks", "total", "counter", "meta", "pad")
-
-        def __init__(self):
-            self.chunks: list[np.ndarray] = []
-            self.total = 0
-            self.counter = 0
-            self.meta = 0
-            self.pad = 0
-
-        def append(self, arr: np.ndarray):
-            if len(arr):
-                self.chunks.append(arr)
-                self.total += len(arr)
-
-    def fold(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        states: dict[int, _Shard] = {}
-        out_s: list[int] = []; out_i: list[int] = []
-        out_t: list[np.ndarray] = []; out_p: list[int] = []; out_m: list[int] = []
-
-        def emit_full(st: _Shard, sh: int):
-            if st.total < seq_len:
-                return
-            buf = np.concatenate(st.chunks)
-            n_full = len(buf) // seq_len
-            out_t.append(buf[: n_full * seq_len])
-            for i in range(n_full):
-                out_s.append(sh)
-                out_i.append(st.counter + i)
-                # straddle pads + meta count ride the FIRST sequence emitted
-                out_p.append(st.pad if i == 0 else 0)
-                out_m.append(st.meta if i == 0 else 0)
-            st.counter += n_full
-            st.pad = 0
-            st.meta = 0
-            rest = buf[n_full * seq_len:]
-            st.chunks = [np.array(rest, copy=True)] if len(rest) else []
-            st.total = len(rest)
-
-        def inject(st: _Shard, sh: int, meta_run: np.ndarray):
-            room = seq_len - (st.total % seq_len)
-            if room < len(meta_run):  # would straddle -> pad out (:302)
-                st.append(np.full(room, pad_id, np.int32))
-                st.pad += room
-                emit_full(st, sh)
-            st.append(meta_run)
-            st.meta += len(meta_run)
-
-        for batch in batches:
-            i_shard = batch.schema.get_field_index("shard")
-            shards_np = np.asarray(batch.column(i_shard))
-            t_offs, t_vals = _list_views(batch.column(batch.schema.get_field_index("toks")))
-            m_offs, m_vals = _list_views(batch.column(batch.schema.get_field_index("mtoks")))
-            for r in range(len(shards_np)):
-                sh = int(shards_np[r])
-                st = states.setdefault(sh, _Shard())
-                doc = t_vals[t_offs[r]:t_offs[r + 1]]
-                meta_run = np.concatenate((
-                    np.array([BOC_ID], np.int32),
-                    m_vals[m_offs[r]:m_offs[r + 1]],
-                    np.array([EOC_ID], np.int32),
-                ))
-                if len(meta_run) > seq_len:  # truncate pathological meta (:296-298)
-                    meta_run = np.concatenate(
-                        (meta_run[: seq_len - 1], np.array([EOC_ID], np.int32)))
-
-                if per_sequence:
-                    # inject at doc start and at every boundary the doc crosses
-                    inject(st, sh, meta_run)
-                    pos = 0
-                    while pos < len(doc):
-                        if st.total % seq_len == 0 and st.total > 0:
-                            emit_full(st, sh)
-                            inject(st, sh, meta_run)
-                        room = seq_len - (st.total % seq_len)
-                        take = min(room, len(doc) - pos)
-                        st.append(doc[pos:pos + take])
-                        pos += take
-                else:
-                    inject(st, sh, meta_run)
-                    st.append(doc)
-                emit_full(st, sh)
-            if out_s:
-                yield from _seq_batch(out_s, out_i, out_t, out_p, seq_len,
-                                      extra={"n_meta_tokens": out_m})
-                out_s, out_i, out_t, out_p, out_m = [], [], [], [], []
-
-        for sh, st in states.items():
-            if st.total:
-                fill = seq_len - st.total
-                out_s.append(sh); out_i.append(st.counter)
-                out_t.append(np.concatenate(
-                    st.chunks + [np.full(fill, pad_id, np.int32)]))
-                out_p.append(fill + st.pad)
-                out_m.append(st.meta)
-        if out_s:
-            yield from _seq_batch(out_s, out_i, out_t, out_p, seq_len,
-                                  extra={"n_meta_tokens": out_m})
-
-    return arranged.mapInArrow(fold, schema)
-
-
 def write_megatron_packed(df: DataFrame, out_dir: str, order_col: str = "doc_id",
                           text_col: str = "text", seq_len: int = 4096,
                           shards: int = 4, vocab_size: int = 50000) -> None:
@@ -449,8 +401,8 @@ def write_megatron_packed(df: DataFrame, out_dir: str, order_col: str = "doc_id"
     seq_len sequences (pad id 1) → write one .bin/.idx pair per shard,
     each packed sequence one Megatron 'document'
     (megatron_tokenizer_context.py:210-356 feeding MegatronTokenizedFile).
-    One mapInArrow runs the :func:`pack_sequences` fold and writes its
-    sequences as they complete, so packed tokens never return to the
+    One mapInArrow runs :func:`_pack_fold` and writes its sequences as
+    they complete, so packed tokens never return to the
     JVM. Only a tiny per-shard summary reaches the driver."""
     arranged = _tokens_by_shard(df, order_col, shards, {"toks": F.col(text_col)}, vocab_size)
     os.makedirs(out_dir, exist_ok=True)
@@ -458,7 +410,7 @@ def write_megatron_packed(df: DataFrame, out_dir: str, order_col: str = "doc_id"
     def write_part(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
         with _ShardFiles(out_dir, vocab_size) as files:
             for runs in _pack_fold(batches, seq_len, pad_id=1):
-                for sh, _, flat, _ in runs:
+                for sh, _, flat, _, _ in runs:
                     files.append(sh, flat, np.full(len(flat) // seq_len, seq_len))
         yield from files.summary()
 

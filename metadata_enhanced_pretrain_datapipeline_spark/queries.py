@@ -9310,7 +9310,7 @@ def q_script_detect(spark, sf):
 )
 def q_lsh_calibration(spark, sf):
     """MinHash-LSH parameter calibration (dedup.choose_lsh_params /
-    lsh_collision_prob — MMDS ch. 3): for the repo's 32-hash signature
+    lsh_collision_probability — MMDS ch. 3): for the repo's 32-hash signature
     family, every (bands, rows) factorization with its S-curve midpoint
     (1/b)^(1/r) and candidate probabilities at Jaccard 0.5/0.7/0.9,
     plus the chosen flag for a 0.7 dedup threshold (nearest midpoint,

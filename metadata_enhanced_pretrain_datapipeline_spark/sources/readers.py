@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from metadata_enhanced_pretrain_datapipeline_spark.functions.text import _bind
 from metadata_enhanced_pretrain_datapipeline_spark.schema import to_documents
 
 #: ParaDocs 18-column headerless gzipped TSV layout
@@ -208,6 +209,30 @@ def _decompressed(raw: bytes) -> bytes:
     return bytes(raw)
 
 
+def _warc_rows(batches, record_type: str | None, text: bool = False):
+    """The record loop behind :func:`read_wet` and
+    :func:`parse_warc_records`: per pandas batch of whole-file
+    ``content`` blobs, one (url, warc_date, record_type, content_length,
+    content) row per record of ``record_type`` (every record when None),
+    content as bytes or, with ``text``, UTF-8 decoded (errors replaced)
+    into a ``text`` column."""
+    import pandas as pd
+
+    body = "text" if text else "content"
+    for pdf in batches:
+        rows = []
+        for blob in pdf["content"]:
+            for h, c in _iter_warc_records(_decompressed(blob)):
+                if record_type and h.get("warc-type") != record_type:
+                    continue
+                rows.append((h.get("warc-target-uri"), h.get("warc-date"),
+                             h.get("warc-type"), len(c),
+                             c.decode("utf-8", "replace") if text else c))
+        yield pd.DataFrame(
+            rows, columns=["url", "warc_date", "record_type",
+                           "content_length", body])
+
+
 def read_wet(spark: SparkSession, path: str,
              record_type: str | None = "conversion") -> DataFrame:
     """Common Crawl WET reader (engine extension; datatrove's WarcReader
@@ -225,28 +250,11 @@ def read_wet(spark: SparkSession, path: str,
     out as Arrow batches, and downstream projection/filtering is
     ordinary Catalyst on the returned columns.
     """
-    import pandas as pd
-
     files = spark.read.format("binaryFile").load(path)
-
-    def parse(batches):
-        for pdf in batches:
-            rows = []
-            for blob in pdf["content"]:
-                for h, c in _iter_warc_records(_decompressed(blob)):
-                    if record_type and h.get("warc-type") != record_type:
-                        continue
-                    rows.append((h.get("warc-target-uri"),
-                                 h.get("warc-date"),
-                                 h.get("warc-type"), len(c),
-                                 c.decode("utf-8", "replace")))
-            yield pd.DataFrame(
-                rows, columns=["url", "warc_date", "record_type",
-                               "content_length", "text"])
-
     return files.select("content").mapInPandas(
-        parse, "url string, warc_date string, record_type string, "
-               "content_length long, text string")
+        lambda batches: _warc_rows(batches, record_type, text=True),
+        "url string, warc_date string, record_type string, "
+        "content_length long, text string")
 
 
 #: fixed schema of Spark's binaryFile source — readStream demands an
@@ -265,23 +273,8 @@ def parse_warc_records(files: DataFrame,
     files — works on BATCH and STREAMING DataFrames alike (mapInPandas
     is streamable), so continuous crawl ingestion and the batch reader
     share one parser byte-for-byte."""
-    import pandas as pd
-
-    def parse(batches):
-        for pdf in batches:
-            rows = []
-            for blob in pdf["content"]:
-                for h, c in _iter_warc_records(_decompressed(blob)):
-                    if record_type and h.get("warc-type") != record_type:
-                        continue
-                    rows.append((h.get("warc-target-uri"),
-                                 h.get("warc-date"),
-                                 h.get("warc-type"), len(c), c))
-            yield pd.DataFrame(
-                rows, columns=["url", "warc_date", "record_type",
-                               "content_length", "content"])
-
-    return files.select("content").mapInPandas(parse, WARC_RECORD_SCHEMA)
+    return files.select("content").mapInPandas(
+        lambda batches: _warc_rows(batches, record_type), WARC_RECORD_SCHEMA)
 
 
 def read_warc(spark: SparkSession, path: str,
@@ -337,6 +330,5 @@ def http_body_str(content) -> "Column":
     passing headers as text."""
     from pyspark.sql import functions as F
 
-    s = F.decode(content, "UTF-8")
-    return F.get(F.transform(F.array(s), lambda t: F.substring(
-        t, F.locate("\r\n\r\n", t) + 4, F.length(t))), 0)
+    return _bind(F.decode(content, "UTF-8"), lambda t: F.substring(
+        t, F.locate("\r\n\r\n", t) + 4, F.length(t)))

@@ -2,7 +2,7 @@
 W1 segmentation and W2 packing invariants must hold for ARBITRARY inputs,
 not just the fixtures."""
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from metadata_enhanced_pretrain_datapipeline_spark.operators import segment, tokens
@@ -122,12 +122,14 @@ def _naive_pack_with_metadata(rows, seq_len, pad_id=1, per_sequence=False):
 @given(
     docs=st.lists(
         st.tuples(st.text(alphabet="pq ", max_size=30),   # text
-                  st.text(alphabet="m", min_size=0, max_size=3)),  # meta word
+                  st.text(alphabet="m ", max_size=40)),  # meta words
         min_size=1, max_size=10,
     ),
     seq_len=st.integers(6, 48),
     per_seq=st.booleans(),
 )
+# an 8-word meta cut to a run of exactly seq_len, re-injected per sequence
+@example(docs=[("p p p", "m m m m m m m m")], seq_len=6, per_seq=True)
 def test_pack_with_metadata_differential(spark, docs, seq_len, per_seq):
     """The Arrow fold must equal the naive per-token list fold exactly —
     including straddle pads, meta/pad attribution and cross-batch carry."""

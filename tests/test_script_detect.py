@@ -10,7 +10,7 @@ from metadata_enhanced_pretrain_datapipeline_spark.functions.text import (
 )
 from metadata_enhanced_pretrain_datapipeline_spark.operators.dedup import (
     choose_lsh_params,
-    lsh_collision_prob,
+    lsh_collision_probability,
 )
 
 
@@ -70,7 +70,7 @@ def test_choose_lsh_params_known_values():
     # a high threshold wants few bands / long rows
     assert choose_lsh_params(0.99, 32) == (1, 32)
     # probability monotone in s and exact at endpoints
-    assert lsh_collision_prob(0.0, 8, 4) == 0.0
-    assert lsh_collision_prob(1.0, 8, 4) == 1.0
-    assert (lsh_collision_prob(0.8, 8, 4)
-            > lsh_collision_prob(0.5, 8, 4))
+    assert lsh_collision_probability(0.0, 8, 4) == 0.0
+    assert lsh_collision_probability(1.0, 8, 4) == 1.0
+    assert (lsh_collision_probability(0.8, 8, 4)
+            > lsh_collision_probability(0.5, 8, 4))
